@@ -95,14 +95,6 @@ def winnow_fingerprint(text: str, k: int = 8, window: int = 4) -> list[int]:
     return sorted(set(out))
 
 
-def word_shingles(text: str, n: int = 3) -> list[str]:
-    """Distinct word n-gram shingles of normalized text."""
-    ws = normalize_text(text).split()
-    if len(ws) < n:
-        return [" ".join(ws)] if ws else []
-    return sorted({" ".join(ws[i: i + n]) for i in range(len(ws) - n + 1)})
-
-
 def md5_minhash_signature(shingles: list[str], num_hashes: int = 16) -> list[str]:
     """MinHash signature from ONE md5 per shingle: hash function i is the
     md5 hex digest rotated left by 2·i characters, and sig[i] is the
@@ -129,14 +121,6 @@ def md5_minhash_signature(shingles: list[str], num_hashes: int = 16) -> list[str
     ]
 
 
-def lsh_bands(signature: list[str], band_size: int = 4) -> list[str]:
-    """Concatenate signature rows into band keys for LSH bucketing."""
-    return [
-        "|".join(signature[i: i + band_size])
-        for i in range(0, len(signature), band_size)
-    ]
-
-
 def jaccard(a: set, b: set) -> float:
     if not a and not b:
         return 1.0
@@ -159,10 +143,6 @@ def simhash64(text: str) -> int:
         if acc[b] > 0:
             out |= 1 << b
     return out
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin(a ^ b).count("1")
 
 
 _HEX = "0123456789abcdef"

@@ -2,21 +2,24 @@
 reference defers to downstream tools).
 
 Pipeline: entity mentions (subjects with a schema:name) → char-3-gram
-shingles → md5-MinHash signature → banded LSH bucketing → candidate
-pairs within buckets → exact Jaccard verification → connected
-components (GraphFrames-style iterative self-join with localCheckpoint)
-→ sameAs map → subject/object rewrite of the triples relation.
+shingles → MinHash-LSH candidate pairs (functions.minhash.minhash_lsh_pairs,
+the operator ``dedup_minhash_lsh`` uses too) → exact Jaccard
+verification → connected components (large-star/small-star, or
+driver-local union-find for small graphs) → sameAs map →
+subject/object rewrite of the triples relation.
 
-Everything through pair generation is JVM-side column expressions
-(md5 / transform / array_min — no Python), so the expensive part scales
-with executors.  Skew guards: LSH buckets are capped (a stop-word-ish
-name shared by millions of entities would otherwise go quadratic) and
-the CC joins run under AQE skew handling.
+Shingling, signatures, banding and pair generation are column
+expressions, except the MinHash rank dictionary: one rotation-rank
+table over the distinct shingles, computed with numpy on the driver
+(≤ 52k char-3-grams over ``[a-z0-9 ]``) and broadcast.  Skew guards:
+LSH buckets are capped (a stop-word-ish name shared by millions of
+entities would otherwise go quadratic) and the CC joins run under AQE
+skew handling.
 
-Determinism: md5 is seeded by band index, candidate pairs are ordered
-(a < b), CC converges to the component-minimum label — output is
-independent of partitioning and parallelism level, which the N-vs-4N
-scaling evidence requires.
+Determinism: the rotation-md5 signature is a pure function of the
+shingle set, candidate pairs are ordered (a < b), CC converges to the
+component-minimum label — output is independent of partitioning and
+parallelism level, which the N-vs-4N scaling evidence requires.
 """
 
 from __future__ import annotations
@@ -118,79 +121,47 @@ def with_shingles(entities: DataFrame) -> DataFrame:
     )
 
 
-def with_minhash(entities: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
-    """Rotation-md5 MinHash on the codegen path (functions/minhash.py):
-    one digest per shingle, exploded rows + groupBy-min instead of
-    interpreted higher-order-function lambdas.  Signature joined back
-    onto the entity rows.  Bit-identical to
-    core.text.md5_minhash_signature."""
-    from ..functions.minhash import minhash_frame
-
-    sig = minhash_frame(entities, ["entity"], k=num_hashes)
-    return entities.join(
-        sig.withColumnRenamed("mh", "minhash"), "entity"
-    )
-
-
 def lsh_candidate_pairs(
     entities: DataFrame,
     band_size: int = BAND_SIZE,
     threshold: float = JACCARD_THRESHOLD,
     max_bucket: int = MAX_BUCKET,
 ) -> DataFrame:
-    """Banded LSH → pairwise candidates within buckets → exact Jaccard
-    verification.  One shuffle on the band key, one self-join per band
-    bucket (buckets are capped), one semi-join back for verification."""
+    """Banded MinHash-LSH candidates (functions.minhash.minhash_lsh_pairs
+    over the exploded char-3-grams) → digit-token agreement → exact
+    Jaccard verification, with shingles and digit tokens joined back
+    onto the distinct candidate pairs."""
+    from ..functions.minhash import minhash_lsh_pairs
+
     # deterministic representative name per entity BEFORE signatures:
     # an entity with several schema:name literals would otherwise get a
     # partitioning-dependent row from dropDuplicates
     uniq = entities.groupBy("entity").agg(F.min("name").alias("name"))
-    ent = with_shingles(uniq)
-    ent = with_minhash(ent).withColumnRenamed("minhash", "minhash_sig")
-    ent = ent.select("entity", "shingles", "digit_tokens",
-                     F.col("minhash_sig").alias("minhash"))
-
-    n_bands = NUM_HASHES // band_size
-    bands = ent.select(
-        "entity", "shingles", "digit_tokens",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {n_bands - 1}),"
-                f" b -> concat_ws('|', slice(minhash, b * {band_size} + 1,"
-                f" {band_size})))"
-            )
-        ).alias("band_idx", "band_key"),
-    ).withColumn("bucket", F.concat_ws("#", "band_idx", "band_key"))
-
+    # barrier: the vocabulary, signature and join-back passes all read
+    # it; without one each re-runs both upstream shuffles (measured on a
+    # 100-page harvest: 2 more jobs and a slower link; a lazy barrier
+    # was slower still)
+    ent = _ckpt(
+        with_shingles(uniq).select("entity", "shingles", "digit_tokens"))
     # cap pathological buckets (stopword-ish names) — observed, not
     # silent: sameas_map logs the dropped-bucket count after the action
-    from ..functions.minhash import cap_buckets
-
     obs = Observation("lsh_bucket_cap")
-    bands = cap_buckets(bands, ["bucket"], max_bucket, observation=obs)
-
-    left = bands.select(F.col("bucket"),
-                        F.col("entity").alias("a"),
-                        F.col("shingles").alias("sh_a"),
-                        F.col("digit_tokens").alias("dt_a"))
-    right = bands.select(F.col("bucket"),
-                         F.col("entity").alias("b"),
-                         F.col("shingles").alias("sh_b"),
-                         F.col("digit_tokens").alias("dt_b"))
-    pairs = (
-        left.join(right, "bucket")
-        .filter(F.col("a") < F.col("b"))
-        .filter(F.col("dt_a") == F.col("dt_b"))
-        .select("a", "b", "sh_a", "sh_b")
-        .dropDuplicates(["a", "b"])
+    pairs = minhash_lsh_pairs(
+        ent.select("entity", F.explode("shingles").alias("s")), "entity",
+        band_size, max_bucket, k=NUM_HASHES, observation=obs,
     )
+    a = ent.select(F.col("entity").alias("a"), F.col("shingles").alias("sh_a"),
+                   F.col("digit_tokens").alias("dt_a"))
+    b = ent.select(F.col("entity").alias("b"), F.col("shingles").alias("sh_b"),
+                   F.col("digit_tokens").alias("dt_b"))
     jaccard = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
         F.array_union("sh_a", "sh_b")
     )
     out = (
-        pairs.withColumn("jaccard", jaccard)
+        pairs.join(a, "a").join(b, "b")
+        .filter(F.col("dt_a") == F.col("dt_b"))
+        .select("a", "b", jaccard.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
     )
     out._lsh_observation = obs  # surfaced for post-action drop logging
     return out

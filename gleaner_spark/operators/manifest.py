@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 MANIFEST_SCHEMA = (
@@ -23,6 +24,13 @@ MANIFEST_SCHEMA = (
 STATUS_STORED = "stored"      # sha recorded
 STATUS_NILL = "NILL"          # visited, no JSON-LD (reference sentinel)
 STATUS_NULL = "NULL"          # visited, empty/invalid doc (reference sentinel)
+
+#: Read-error conditions that mean "not written yet" — a parquet
+#: directory or an Iceberg table that no earlier run created.  Every
+#: other read error (corrupt files, conflicting partition layouts, a
+#: wrong catalog) must surface: tolerating it would silently turn a diff
+#: run into a full re-run.
+MISSING_TABLE_CONDITIONS = ("PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND")
 
 
 def manifest_path(base_dir: str) -> str:
@@ -65,19 +73,12 @@ def write_manifest(manifest: DataFrame, base_dir: str) -> None:
 
 
 def read_manifest(spark: SparkSession, base_dir: str) -> DataFrame | None:
+    """The manifest table, or None when no run has written one yet (full
+    mode); any other read error raises."""
     path = manifest_path(base_dir)
     try:
         return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() not in MISSING_TABLE_CONDITIONS:
+            raise
         return None
-
-
-def resume_filter(pages: DataFrame, manifest: DataFrame | None,
-                  stage: str = "extract") -> DataFrame:
-    """J3: drop URLs the manifest already covers — the reference's
-    ``difference(sitemapURLs, alreadySummoned)`` (resources.go:210-245)
-    as a left-anti join.  With no manifest: full mode."""
-    if manifest is None:
-        return pages
-    done = manifest.filter(F.col("stage") == stage).select("url").distinct()
-    return pages.join(done, "url", "left_anti")

@@ -19,6 +19,7 @@ import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 logger = logging.getLogger(__name__)
@@ -349,9 +350,11 @@ def _run_pipeline(
                 spark.read.table(f"{cat[0]}.{cat[1]}.docs") if cat
                 else spark.read.parquet(os.path.join(base, "docs"))
             )
+        except AnalysisException as e:  # no docs yet: nothing to drop
+            if e.getCondition() not in mf.MISSING_TABLE_CONDITIONS:
+                raise
+        else:
             docs = docs.join(prior.select("doc_sha1"), "doc_sha1", "left_anti")
-        except Exception:
-            pass
     with _timed("dedup"):
         docs = _persist(docs, base, "docs", None, write_mode, cat)
 

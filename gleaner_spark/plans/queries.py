@@ -79,12 +79,13 @@ def _shingles_sql(col: str, duck: bool) -> str:
 def _minhash_sql(shingles: str, duck: bool, k: int = NUM_MINHASH) -> str:
     """Rotation MinHash (see core/text.py:md5_minhash_signature): hash i
     = md5 hex rotated left 2·i chars, one digest per shingle.  The array
-    form is for oracles / small inputs; the Spark hot path uses
-    ``functions.minhash.minhash_from_rows`` (exploded rows →
-    whole-stage-codegen md5 + substring, then groupBy-min) because
-    per-element expressions inside
-    higher-order functions run interpreted — measured ~80 s vs ~3 s at
-    sf0.1 for the identical result."""
+    form is for oracles / small inputs; Spark signatures come from
+    ``functions.minhash`` — ``minhash_from_rows`` (exploded rows →
+    whole-stage-codegen md5 + substring, then groupBy-min) and, for LSH,
+    ``minhash_lsh_pairs``'s int-rank encoding of the same order —
+    because per-element expressions inside higher-order functions run
+    interpreted: measured ~80 s vs ~3 s at sf0.1 for the identical
+    result."""
     if not 1 <= k <= 16:
         raise ValueError(f"rotation MinHash supports 1..16 hashes, got k={k}")
     if duck:
@@ -807,128 +808,15 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     (lsh_params(t=0.7, k=16) → 4 bands of 4) → capped bucket join →
     ordered distinct pairs.  Buckets larger than LSH_MAX_BUCKET are
     dropped before the self-join (oracle applies the identical cap).
-
-    Round 6: the signature pass dominated this query's wall time —
-    md5 + 16 rotation-concats evaluated per shingle OCCURRENCE (5.9M
-    rows at sf1.0) when the corpus has only ~29k DISTINCT shingles.
-    When the vocabulary is small enough to broadcast, compute the 16
-    rotated digests once per distinct shingle in a dictionary and
-    broadcast-attach them; the per-occurrence work collapses to 16
-    string-min comparisons.  Same signatures bit-for-bit; the huge-
-    vocabulary fallback is the old exploded-rows path."""
+    The operator (functions.minhash.minhash_lsh_pairs) is the linker's;
+    the barrier pays tokenization once for its vocabulary and signature
+    passes."""
     from ..functions.barrier import reliable_ckpt
-    from ..functions.minhash import cap_buckets, minhash_from_rows
+    from ..functions.minhash import minhash_lsh_pairs
 
-    d = _dup_rich_docs(spark, sf_dir)
-    # barrier: the dictionary pass and the signature pass both read the
-    # shingle rows, and tokenization is the expensive part — pay it once
-    rows = reliable_ckpt(_shingle_rows(d))
-    dict_df = reliable_ckpt(rows.select("s").distinct())
-    n_dict = dict_df.count()
-    if n_dict <= 1_000_000:
-        # The band buckets downstream only test EQUALITY of signature
-        # values — the hex strings themselves never reach the output.
-        # Rank-encode each rotation on the (tiny, provably ≤1M) distinct
-        # shingle dictionary: id_i(s) = ordinal of rot_i(md5(s)) with
-        # np.unique, so equal rotation strings get equal ids (md5 ties
-        # included) and min-of-ranks ≡ min-of-strings under the same
-        # order.  The per-occurrence work becomes 16 int mins and the
-        # band keys become int tuples — no per-row md5, rotation concats
-        # or string compares.
-        import hashlib
-
-        import numpy as np
-
-        pdf = dict_df.toPandas()
-        hexes = [hashlib.md5(s.encode("utf-8")).hexdigest()
-                 for s in pdf["s"]]
-        for i in range(NUM_MINHASH):
-            rot = np.array([h[2 * i:] + h[:2 * i] for h in hexes])
-            _, inv = np.unique(rot, return_inverse=True)
-            pdf[f"k{i}"] = inv.astype(np.int32)
-        ranks = spark.createDataFrame(pdf)
-        # Barrier the tiny (100k × 16-int) signature table: the band
-        # self-join below reads its input THREE times (bucket counts +
-        # both join sides) and the planner reuses none of the exchanges
-        # (26 Exchanges, 0 Reused measured) — without the barrier the
-        # whole shingle-scan→join→agg subtree re-executes per read.
-        sig_ints = reliable_ckpt(
-            rows.join(F.broadcast(ranks), "s")
-            .groupBy("doc_id")
-            .agg(*[F.min(f"k{i}").alias(f"m{i}")
-                   for i in range(NUM_MINHASH)])
-        )
-        # Band keys as two exact-packed longs per band (rank < 2^31 so
-        # hi*2^32 + lo is bijective — bucket equality, membership and
-        # the cap are IDENTICAL to the string formulation, with int
-        # comparisons instead of 16-char concat_ws strings).
-        pack = [
-            F.struct(
-                F.lit(b).alias("bi"),
-                (F.col(f"m{LSH_BAND * b}").cast("long") * 4294967296
-                 + F.col(f"m{LSH_BAND * b + 1}")).alias("p0"),
-                (F.col(f"m{LSH_BAND * b + 2}").cast("long") * 4294967296
-                 + F.col(f"m{LSH_BAND * b + 3}")).alias("p1"),
-            )
-            for b in range(LSH_BANDS)
-        ]
-        bands = sig_ints.select(
-            "doc_id", F.explode(F.array(*pack)).alias("bk")
-        ).select("doc_id", "bk.bi", "bk.p0", "bk.p1")
-        keys = ["bi", "p0", "p1"]
-        bands = cap_buckets(bands, keys, LSH_MAX_BUCKET)
-        l = bands.select(*keys, F.col("doc_id").alias("a"))
-        r = bands.select(*keys, F.col("doc_id").alias("b"))
-        return (
-            l.join(r, keys)
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b")
-            .distinct()
-        )
-    elif n_dict <= 4_000_000:
-        # vocabulary too big to collect but fine to broadcast: rotations
-        # precomputed once per distinct shingle, string min-agg
-        rot = dict_df.withColumn("h", F.md5("s")).select(
-            "s",
-            *[
-                F.concat(
-                    F.substring("h", 2 * i + 1, 32 - 2 * i),
-                    F.substring("h", 1, 2 * i),
-                ).alias(f"r{i}")
-                for i in range(NUM_MINHASH)
-            ],
-        )
-        sig = (
-            rows.join(F.broadcast(rot), "s")
-            .groupBy("doc_id")
-            .agg(*[F.min(f"r{i}").alias(f"m{i}")
-                   for i in range(NUM_MINHASH)])
-            .select(
-                "doc_id",
-                F.array(*[f"m{i}" for i in range(NUM_MINHASH)]).alias("mh"),
-            )
-        )
-    else:
-        sig = minhash_from_rows(rows, ["doc_id"], k=NUM_MINHASH)
-    n_bands = LSH_BANDS
-    bands = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {n_bands - 1}),"
-                f" b -> concat_ws('|', slice(mh, b * {LSH_BAND} + 1, {LSH_BAND})))"
-            )
-        ).alias("band_idx", "band_key"),
-    ).withColumn("bucket", F.concat_ws("#", "band_idx", "band_key"))
-    bands = cap_buckets(bands, ["bucket"], LSH_MAX_BUCKET)
-    l = bands.select("bucket", F.col("doc_id").alias("a"))
-    r = bands.select("bucket", F.col("doc_id").alias("b"))
-    return (
-        l.join(r, "bucket")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    rows = reliable_ckpt(_shingle_rows(_dup_rich_docs(spark, sf_dir)))
+    return minhash_lsh_pairs(rows, "doc_id", LSH_BAND, LSH_MAX_BUCKET,
+                             k=NUM_MINHASH)
 
 
 O_DEDUP_MINHASH = f"""
@@ -1229,51 +1117,38 @@ def _simhash64_sums(df):
     return toks.groupBy("doc_id").agg(*aggs)
 
 
-def _simhash64_pack_ints(sums):
-    """(doc_id, s0..s63) → (doc_id, sig_hi, sig_lo) — the packed-longs
-    half of :func:`_simhash64_pack`, for callers that never need the
-    hex signature (q_dedup_simhash_pairs): skips 16 nibble-case
-    substring lookups and a 16-way concat per doc."""
-    def nib(k: int) -> str:
-        return "(" + " + ".join(
-            f"(case when s{4 * k + r} > 0 then {1 << r} else 0 end)"
-            for r in range(4)
-        ) + ")"
+def _simhash_nib(k: int) -> str:
+    """Signature nibble k (0..15) from the bit sums s{4k}..s{4k+3}."""
+    return "(" + " + ".join(
+        f"(case when s{4 * k + r} > 0 then {1 << r} else 0 end)"
+        for r in range(4)
+    ) + ")"
 
-    hi = "cast(" + " + ".join(
-        f"cast({nib(k)} as bigint) * {1 << (4 * (7 - k))}" for k in range(8)
-    ) + " as bigint)"
-    lo = "cast(" + " + ".join(
-        f"cast({nib(k + 8)} as bigint) * {1 << (4 * (7 - k))}"
-        for k in range(8)
-    ) + " as bigint)"
+
+def _simhash64_pack_ints(sums, *extra):
+    """(doc_id, s0..s63) → (doc_id, *extra, sig_hi, sig_lo) — the
+    packed-longs signature alone, for callers that never need the hex
+    form (q_dedup_simhash_pairs): skips 16 nibble-case substring lookups
+    and a 16-way concat per doc."""
+    def word(first: int) -> str:  # nibbles first..first+7, big-endian
+        return "cast(" + " + ".join(
+            f"cast({_simhash_nib(first + k)} as bigint) * {1 << (4 * (7 - k))}"
+            for k in range(8)
+        ) + " as bigint)"
+
     return sums.select(
-        "doc_id", F.expr(hi).alias("sig_hi"), F.expr(lo).alias("sig_lo"),
+        "doc_id", *extra,
+        F.expr(word(0)).alias("sig_hi"), F.expr(word(8)).alias("sig_lo"),
     )
 
 
 def _simhash64_pack(sums):
     """(doc_id, s0..s63) → (doc_id, simhash64 hex, sig_hi, sig_lo)."""
-    def nib(k: int) -> str:
-        return "(" + " + ".join(
-            f"(case when s{4 * k + r} > 0 then {1 << r} else 0 end)"
-            for r in range(4)
-        ) + ")"
-
     hexpr = "concat(" + ", ".join(
-        f"substring('0123456789abcdef', {nib(k)} + 1, 1)" for k in range(16)
+        f"substring('0123456789abcdef', {_simhash_nib(k)} + 1, 1)"
+        for k in range(16)
     ) + ")"
-    hi = "cast(" + " + ".join(
-        f"cast({nib(k)} as bigint) * {1 << (4 * (7 - k))}" for k in range(8)
-    ) + " as bigint)"
-    lo = "cast(" + " + ".join(
-        f"cast({nib(k + 8)} as bigint) * {1 << (4 * (7 - k))}"
-        for k in range(8)
-    ) + " as bigint)"
-    return sums.select(
-        "doc_id", F.expr(hexpr).alias("simhash64"),
-        F.expr(hi).alias("sig_hi"), F.expr(lo).alias("sig_lo"),
-    )
+    return _simhash64_pack_ints(sums, F.expr(hexpr).alias("simhash64"))
 
 
 def q_dedup_simhash_pairs(spark, sf_dir):
@@ -1686,8 +1561,8 @@ def q_dedup_embedding_cosine(spark, sf_dir):
                   _sign_bucket_expr(bits).alias("bucket"))
     eb = cap_buckets(eb, ["bucket"], SIGN_LSH_MAX_BUCKET)
     # per-vector norm once (float-identical to the fused per-pair HOF it
-    # replaces) + unrolled codegen dot when the dim is known — same
-    # rewrite as q_ann_lsh_bucketed, same bit-identical-order argument
+    # replaces); the dot stays the zip_with/aggregate fold — same rewrite
+    # as q_ann_lsh_bucketed, same bit-identical-order argument
     nrm = ("sqrt(aggregate(embedding, cast(0.0 as double),"
            " (acc, v) -> acc + cast(v as double) * cast(v as double)))")
     eb = eb.withColumn("nrm", F.expr(nrm))
@@ -3222,33 +3097,6 @@ select printf('m%06d', i), 'audio/wav', 0, 0, cast(rate as int),
        cast(ns as bigint), sum_val, cast((ns*1000)//rate as int)
 from wav_agg
 """
-
-
-def q_multimodal_decode_frames(spark, sf_dir):
-    """The two codec-bound stub paths (image decode-features + video
-    frame sampling) harmonized to a stable schema tagged by ``kind``.
-    Pytest-covered; NOT a registry row since round 5 (its slot now
-    carries the fully-oracled real decode above — the stub codecs are
-    iterated hashes, not portable SQL)."""
-    dec = q_multimodal_decode(spark, sf_dir).select(
-        "payload_id",
-        F.lit("decode").alias("kind"),
-        F.col("width").cast("long").alias("i1"),
-        F.col("height").cast("long").alias("i2"),
-        F.col("n_pixels").cast("long").alias("i3"),
-        F.concat_ws(
-            ":", F.col("mime"), F.round(F.col("mean_luma"), 6).cast("string")
-        ).alias("detail"),
-    )
-    frm = q_multimodal_frames(spark, sf_dir).select(
-        "payload_id",
-        F.lit("frame").alias("kind"),
-        F.col("frame_idx").cast("long").alias("i1"),
-        F.col("frame_ts_ms").cast("long").alias("i2"),
-        F.lit(0).cast("long").alias("i3"),
-        F.col("frame_md5").alias("detail"),
-    )
-    return dec.unionByName(frm)
 
 
 # ---------------------------------------------------------------------------

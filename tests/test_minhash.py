@@ -1,6 +1,5 @@
-"""MinHash function-boundary contracts (round-2 ADVICE): the empty-
-shingle sentinel, the 16-rotation limit, and graph-identity doc dedup +
-rewrite-flagged materialize."""
+"""MinHash function-boundary contracts (round-2 ADVICE): the 16-rotation
+limit, and graph-identity doc dedup + rewrite-flagged materialize."""
 
 from __future__ import annotations
 
@@ -8,31 +7,51 @@ import pytest
 from pyspark.sql import functions as F
 
 from gleaner_spark.core.text import md5_minhash_signature
-from gleaner_spark.functions.minhash import minhash_frame
-
-
-def test_minhash_empty_shingles_get_sentinel(spark):
-    df = spark.createDataFrame(
-        [(1, ["abc", "def"]), (2, []), (3, None)],
-        "id long, shingles array<string>",
-    )
-    got = {r.id: list(r.mh) for r in minhash_frame(df, ["id"], k=4).collect()}
-    assert set(got) == {1, 2, 3}  # empty/null rows are KEPT
-    assert got[2] == md5_minhash_signature([], 4)
-    assert got[3] == md5_minhash_signature([], 4)
-    assert got[1] == md5_minhash_signature(["abc", "def"], 4)
+from gleaner_spark.functions.minhash import (
+    minhash_from_rows, minhash_lsh_pairs,
+)
 
 
 def test_minhash_k_limit_enforced(spark):
-    df = spark.createDataFrame([(1, ["a"])], "id long, shingles array<string>")
+    df = spark.createDataFrame([(1, "a")], "id long, s string")
     with pytest.raises(ValueError, match="1..16"):
-        minhash_frame(df, ["id"], k=17)
+        minhash_from_rows(df, ["id"], k=17)
+    with pytest.raises(ValueError, match="1..16"):
+        minhash_lsh_pairs(df, "id", band_size=1, max_bucket=8, k=17)
     with pytest.raises(ValueError, match="1..16"):
         md5_minhash_signature(["a"], 17)
     from gleaner_spark.plans.queries import _minhash_sql
 
     with pytest.raises(ValueError, match="1..16"):
         _minhash_sql("shingles", True, k=20)
+
+
+@pytest.mark.parametrize("k,band_size", [(16, 1), (15, 3), (16, 8)])
+def test_minhash_lsh_pairs_any_band_width_matches_reference(
+        spark, k, band_size):
+    """The rank path packs two ranks per long for ANY band width — odd
+    widths leave one rank alone — and must band exactly like the
+    md5-string signature, bucket cap included."""
+    import random
+
+    rng = random.Random(k * 100 + band_size)
+    vocab = [f"t{i}" for i in range(12)]
+    docs = {d: set(rng.sample(vocab, rng.randint(1, 4))) for d in range(60)}
+    rows = spark.createDataFrame(
+        [(d, s) for d, sh in docs.items() for s in sorted(sh)],
+        "id long, s string")
+    got = {(r.a, r.b)
+           for r in minhash_lsh_pairs(rows, "id", band_size, 8, k=k).collect()}
+
+    buckets = {}
+    for d, sh in docs.items():
+        sig = md5_minhash_signature(sorted(sh), k)
+        for b in range(k // band_size):
+            key = (b, tuple(sig[b * band_size:(b + 1) * band_size]))
+            buckets.setdefault(key, []).append(d)
+    want = {(x, y) for m in buckets.values() if len(m) <= 8
+            for x in m for y in m if x < y}
+    assert got == want and want
 
 
 def test_dedup_docs_collapses_norm_sha_collisions(spark):

@@ -293,6 +293,44 @@ def test_resume_skips_completed_urls(spark, tmp_path):
     assert result.blocks.select("url").distinct().count() == 20
 
 
+def test_read_manifest_missing_is_full_mode_corrupt_raises(spark, tmp_path):
+    """No manifest yet → None (full mode); a manifest that exists but
+    cannot be read must raise, not silently become a full re-run."""
+    from gleaner_spark.operators.manifest import read_manifest
+
+    assert read_manifest(spark, str(tmp_path / "fresh")) is None
+    bad = tmp_path / "corrupt" / "manifest"
+    for part in ("stage=extract", "other=x/y=1"):  # conflicting layouts
+        (bad / part).mkdir(parents=True)
+        (bad / part / "part-0.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="CONFLICTING_PARTITION_COLUMN_NAMES"):
+        read_manifest(spark, str(tmp_path / "corrupt"))
+
+
+def test_diff_prior_docs_missing_is_full_mode_corrupt_raises(spark, tmp_path):
+    """Diff mode's cross-run dedup reads the earlier runs' docs table:
+    absent (first run) → every doc is kept; present but unreadable →
+    the run fails instead of silently skipping the dedup."""
+    src = gen_sources_spark(spark)
+    pages = gen_pages_spark(spark, 12, 2)
+
+    def run(out):
+        return run_pipeline(spark, pages, src, PipelineConfig(
+            output_dir=str(out), run_id="d1", mode="diff",
+            link_entities=False, write_stats=False))
+
+    full = run_pipeline(spark, pages, src, PipelineConfig(
+        output_dir=str(tmp_path / "full"), run_id="f1",
+        link_entities=False, write_stats=False))
+    assert run(tmp_path / "fresh").docs.count() == full.docs.count() > 0
+
+    (tmp_path / "corrupt" / "docs").mkdir(parents=True)
+    (tmp_path / "corrupt" / "docs" / "part-0.parquet").write_bytes(
+        b"not parquet")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        run(tmp_path / "corrupt")
+
+
 def test_connected_components_shapes(spark):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d"),      # chain
@@ -355,6 +393,77 @@ def test_entity_linking_gold_clusters(spark):
         present = {n for r in named for n in r.names if n in gc}
         if len(present) > 1:
             assert any(g == present for g in got), gc
+
+
+def _reference_linker_pairs(entities, band_size=2, max_bucket=64,
+                            threshold=0.7):
+    """Pure-Python lsh_candidate_pairs: md5 rotation MinHash, 8 bands
+    of 2, bucket cap, digit-token agreement, exact char-3-gram Jaccard."""
+    import re
+
+    from gleaner_spark.core.text import md5_minhash_signature
+
+    names = {}
+    for e, n in entities:
+        names[e] = min(names.get(e, n), n)
+    ent = {}
+    for e, n in names.items():
+        norm = re.sub(r"[^a-z0-9]+", " ", n.lower()).strip(" ")
+        sh = {norm[i:i + 3] for i in range(max(len(norm) - 2, 1))}
+        digits = sorted(t for t in norm.split(" ") if t.isdigit())
+        ent[e] = (sh, digits)
+    buckets = {}
+    for e, (sh, _) in sorted(ent.items()):
+        sig = md5_minhash_signature(sorted(sh), 16)
+        for b in range(16 // band_size):
+            key = (b, tuple(sig[b * band_size:(b + 1) * band_size]))
+            buckets.setdefault(key, []).append(e)
+    cands = {
+        tuple(sorted((m[i], m[j])))
+        for m in buckets.values() if len(m) <= max_bucket
+        for i in range(len(m)) for j in range(i + 1, len(m))
+    }
+    want = {}
+    for a, b in cands:
+        (sa, da), (sb, db) = ent[a], ent[b]
+        jac = len(sa & sb) / len(sa | sb)
+        if da == db and jac >= threshold:
+            want[(a, b)] = jac
+    return want
+
+
+@pytest.mark.parametrize("rank_dict_max", [None, 0], ids=["rank", "fallback"])
+def test_lsh_candidate_pairs_match_python_reference(spark, monkeypatch,
+                                                    rank_dict_max):
+    """The linker's candidate pairs on both sides of the RANK_DICT_MAX
+    gate equal the pure-Python reference — near-variants pair, digit
+    tokens split look-alikes, a 70-member identical-name bucket is
+    capped away, and multi-name entities use their min name."""
+    from gleaner_spark.functions import minhash
+
+    if rank_dict_max is not None:
+        monkeypatch.setattr(minhash, "RANK_DICT_MAX", rank_dict_max)
+    names = [
+        "Ocean Data Lab", "Ocean Data Labs", "The Ocean Data Lab",
+        "Ocean-Data Lab, Inc.", "Marine Survey 01", "Marine Survey 02",
+        "Marine Survey 01 ", "Institute of Marine Research",
+        "Institute for Marine Research", "Marine Research Institute",
+        "US Geological Survey", "U.S. Geological Survey",
+        "Geological Survey", "ab", "abc", "Polar Data Centre",
+        "Polar Data Center", "National Polar Data Centre",
+    ]
+    entities = [(f"<https://x.org/e{i:03d}>", n) for i, n in enumerate(names)]
+    entities += [(f"<https://x.org/h{i:03d}>", "Acme Holdings")
+                 for i in range(70)]
+    entities.append(("<https://x.org/e000>", "Zulu Ocean Data Lab"))
+    df = spark.createDataFrame(entities, "entity string, name string")
+    got = {(r.a, r.b): r.jaccard
+           for r in lsh_candidate_pairs(df).collect()}
+    want = _reference_linker_pairs(entities)
+    assert got == want
+    assert ("<https://x.org/e000>", "<https://x.org/e001>") in want
+    assert ("<https://x.org/e004>", "<https://x.org/e005>") not in want
+    assert not any(a.startswith("<https://x.org/h") for a, _ in want)
 
 
 def test_sitegraph_ingestion_big_doc_bounded(spark):

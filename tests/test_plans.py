@@ -495,14 +495,22 @@ def test_simhash_pairs_algebra_handles_empty_and_whitespace(spark, tmp_path):
     assert got_pairs == want
 
 
-def test_minhash_lsh_rank_path_matches_python_reference(spark, tmp_path):
-    """The int-rank signature encoding must produce the exact pair set
-    of the md5-string reference (core.text.md5_minhash_signature +
-    identical banding and bucket cap) on a random corpus."""
+@pytest.mark.parametrize("rank_dict_max", [None, 0], ids=["rank", "fallback"])
+def test_minhash_lsh_rank_path_matches_python_reference(
+        spark, tmp_path, monkeypatch, rank_dict_max):
+    """Both sides of the RANK_DICT_MAX gate — the int-rank signature
+    encoding and the hex-string fallback (gate forced to 0) — must
+    produce the exact pair set of the md5-string reference
+    (core.text.md5_minhash_signature + identical banding and bucket
+    cap) on a random corpus."""
     from gleaner_spark.core.text import md5_minhash_signature
+    from gleaner_spark.functions import minhash
     from gleaner_spark.plans.queries import (
         LSH_BAND, LSH_BANDS, LSH_MAX_BUCKET, NUM_MINHASH,
     )
+
+    if rank_dict_max is not None:
+        monkeypatch.setattr(minhash, "RANK_DICT_MAX", rank_dict_max)
 
     rows = _random_texts(80, seed=23)
     sf = _mk_docs_dir(spark, tmp_path, rows)
