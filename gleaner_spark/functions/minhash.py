@@ -118,6 +118,19 @@ def cap_buckets(bands: DataFrame, keys: list[str], max_bucket: int,
     )
 
 
+def bucket_cap_counts(observation) -> dict | None:
+    """{dropped_buckets, total_buckets} that :func:`cap_buckets`
+    observed.  Call it only after an action ran the capped plan (the
+    read blocks until then).  None when Spark recorded no counts: AQE
+    replaces a join with an empty side by an empty relation and drops
+    the observed node with it, which happens when no bucket survives
+    the cap or no candidate pair comes out of the band join."""
+    # the empty row is the no-counts case; PySpark's .get fails on it
+    if observation._jo.getRow().length() == 0:
+        return None
+    return observation.get
+
+
 def band_keys(sig: DataFrame, id_cols: list[str], band_size: int,
               mh_col: str = "mh") -> DataFrame:
     """Explode a signature into (id_cols..., bucket) band rows —
@@ -160,6 +173,25 @@ def _packed_bands(sig: DataFrame, id_col: str, k: int,
     return bands, ["bi", *packs]
 
 
+def rotation_ranks(shingles: list[str], k: int = 16):
+    """(len(shingles), k) int32 array: column i ranks rot_i(md5(s)) —
+    the md5 hex digest rotated left by 2·i characters — among the given
+    distinct shingles (``np.unique``: equal rotations get equal ranks,
+    md5 ties included), so min-of-ranks ≡ min-of-strings under the
+    same order.  The one rank encoder behind :func:`minhash_lsh_pairs`
+    and the linker's driver-local path."""
+    import hashlib
+
+    import numpy as np
+
+    hexes = [hashlib.md5(s.encode("utf-8")).hexdigest() for s in shingles]
+    out = np.empty((len(hexes), k), np.int32)
+    for i in range(k):
+        rot = np.array([h[2 * i:] + h[:2 * i] for h in hexes], dtype=str)
+        out[:, i] = np.unique(rot, return_inverse=True)[1].reshape(-1)
+    return out
+
+
 def minhash_lsh_pairs(rows: DataFrame, id_col: str, band_size: int,
                       max_bucket: int, k: int = 16,
                       observation=None) -> DataFrame:
@@ -171,12 +203,9 @@ def minhash_lsh_pairs(rows: DataFrame, id_col: str, band_size: int,
 
     Rank path (distinct vocabulary ≤ :data:`RANK_DICT_MAX`): the band
     buckets only test EQUALITY of signature values, so each rotation is
-    rank-encoded on the driver — id_i(s) = ordinal of rot_i(md5(s))
-    among the distinct shingles (``np.unique``: equal rotations get
-    equal ids, md5 ties included) — and min-of-ranks ≡ min-of-strings
-    under the same order.  The per-row work becomes k int mins and the
-    band keys packed longs instead of per-row md5, rotation concats and
-    string compares (sf1.0 ``dedup_minhash_lsh`` 26.0 → 6.1 s).  One
+    rank-encoded on the driver (:func:`rotation_ranks`).  The per-row
+    work becomes k int mins and the band keys packed longs instead of
+    per-row md5, rotation concats and string compares (sf1.0 ``dedup_minhash_lsh`` 26.0 → 6.1 s).  One
     ``limit(RANK_DICT_MAX + 1)`` job both measures the vocabulary and
     collects it.  Above the gate: the exploded hex-string signature
     (:func:`minhash_from_rows`) with string band keys
@@ -187,16 +216,9 @@ def minhash_lsh_pairs(rows: DataFrame, id_col: str, band_size: int,
         raise ValueError(f"band_size must divide k={k}, got {band_size}")
     vocab = rows.select("s").distinct().limit(RANK_DICT_MAX + 1).toPandas()
     if len(vocab) <= RANK_DICT_MAX:
-        import hashlib
-
-        import numpy as np
-
-        hexes = [hashlib.md5(s.encode("utf-8")).hexdigest()
-                 for s in vocab["s"]]
+        rank = rotation_ranks(vocab["s"].tolist(), k)
         for i in range(k):
-            rot = np.array([h[2 * i:] + h[:2 * i] for h in hexes])
-            vocab[f"k{i}"] = np.unique(rot, return_inverse=True)[1].astype(
-                np.int32)
+            vocab[f"k{i}"] = rank[:, i]
         ranks = rows.sparkSession.createDataFrame(
             vocab, ", ".join(["s string", *[f"k{i} int" for i in range(k)]]))
         # barrier: the band self-join reads the signature THREE times

@@ -209,8 +209,9 @@ def prune_triples(spark, out_dir: str, bucket: str = "gleaner"):
 def _recover_prune_swap(out: str) -> None:
     """Crash recovery for the prune swap below: the two os.replace
     calls have a window where ``triples`` is missing and the data sits
-    at ``triples.pruned-old`` — restore it before doing anything else
-    so a crashed prune never strands the table."""
+    at ``triples.pruned-old`` — :func:`main` restores it before any
+    command that takes ``--out`` opens the warehouse, so a crashed
+    prune never strands the table."""
     final = os.path.join(out, "triples")
     old = os.path.join(out, "triples.pruned-old")
     if not os.path.exists(final) and os.path.exists(old):
@@ -220,7 +221,6 @@ def _recover_prune_swap(out: str) -> None:
 
 
 def _cmd_prune(args) -> int:
-    _recover_prune_swap(args.out)
     spark, owned = _session("gleaner-prune", args.cores)
     try:
         kept, _ = prune_triples(spark, args.out, args.bucket)
@@ -236,8 +236,8 @@ def _cmd_prune(args) -> int:
             # swap via two renames: a reader never sees a HALF-WRITTEN
             # table, but there IS a crash window between the renames
             # where `triples` is briefly absent — _recover_prune_swap
-            # (run at prune startup) restores `triples.pruned-old` if a
-            # crash lands in it
+            # (run by main before every --out command) restores
+            # `triples.pruned-old` if a crash lands in it
             import shutil
             final = os.path.join(args.out, "triples")
             old = os.path.join(args.out, "triples.pruned-old")
@@ -392,6 +392,8 @@ def main(argv: list[str] | None = None) -> int:
     prn.set_defaults(fn=_cmd_prune)
 
     args = p.parse_args(argv)
+    if getattr(args, "out", None):
+        _recover_prune_swap(args.out)
     return args.fn(args)
 
 

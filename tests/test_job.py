@@ -136,6 +136,27 @@ def test_show_finds_doc_by_sha_prefix(spark, warehouse, capsys):
     assert rc_miss == 1
 
 
+def test_show_recovers_interrupted_prune_swap(spark, warehouse, capsys,
+                                             tmp_path):
+    """A prune that crashed between its two renames leaves only
+    ``triples.pruned-old``: the next command that opens the warehouse —
+    here ``show`` — restores ``triples`` first."""
+    import shutil
+
+    src, _ = warehouse
+    out = str(tmp_path / "crashed_wh")
+    shutil.copytree(src, out)
+    os.replace(os.path.join(out, "triples"),
+               os.path.join(out, "triples.pruned-old"))
+    sha = spark.read.parquet(os.path.join(out, "docs")).first().doc_sha1
+    rc = job.main(["show", "--out", out, "--sha", sha, "--cores", "4"])
+    captured = capsys.readouterr()
+    assert rc == 0
+    assert "recovered triples table" in captured.err
+    assert os.path.isdir(os.path.join(out, "triples"))
+    assert not os.path.exists(os.path.join(out, "triples.pruned-old"))
+
+
 def test_prune_noop_on_consistent_warehouse(spark, warehouse, capsys):
     """Freshly-built warehouse: every graph is doc-backed or structural
     — prune must drop nothing (dry-run leaves the table untouched)."""

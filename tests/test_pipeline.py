@@ -367,18 +367,47 @@ def test_connected_components_raises_on_iteration_cap(spark):
         connected_components(edges, max_iterations=1, local_max_edges=0)
 
 
-def test_entity_linking_gold_clusters(spark):
+#: ``LOCAL_LINK_MAX`` on both sides of the linker's driver-local gate
+LINK_GATE = pytest.mark.parametrize(
+    "local_link_max", [None, 0], ids=["local", "distributed"])
+
+
+def _set_link_gate(monkeypatch, local_link_max):
+    from gleaner_spark.operators import link
+
+    if local_link_max is not None:
+        monkeypatch.setattr(link, "LOCAL_LINK_MAX", local_link_max)
+
+
+def _org_triples(spark, entities):
+    """Organization-typed (entity, name) mentions as a triples frame."""
+    t = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
+    nm = "<https://schema.org/name>"
+    org = "<https://schema.org/Organization>"
+    rows = []
+    for e, name in entities:
+        rows.append((e, t, org, "g"))
+        rows.append((e, nm, f'"{name}"', "g"))
+    return spark.createDataFrame(
+        rows, "subject string, predicate string, object string, graph string"
+    )
+
+
+@LINK_GATE
+def test_entity_linking_gold_clusters(spark, monkeypatch, local_link_max):
+    from gleaner_spark.operators.link import sameas_map
+
+    _set_link_gate(monkeypatch, local_link_max)
     pages = gen_pages_spark(spark, 150, 8)
     src = gen_sources_spark(spark)
     triples = mill_stage(
         dedup_docs(normalize_stage(extract_stage(with_source(pages, src))))
     ).localCheckpoint(eager=True)
     mentions = entity_mentions(triples).localCheckpoint(eager=True)
-    edges = lsh_candidate_pairs(mentions).localCheckpoint(eager=True)
-    comp = connected_components(edges)
+    canon = sameas_map(triples)
     named = (
-        mentions.join(comp, "entity", "left")
-        .select("name", F.coalesce("component", "entity").alias("component"))
+        mentions.join(canon, "entity", "left")
+        .select("name", F.coalesce("canonical", "entity").alias("component"))
         .groupBy("component")
         .agg(F.collect_set("name").alias("names"))
         .collect()
@@ -432,6 +461,24 @@ def _reference_linker_pairs(entities, band_size=2, max_bucket=64,
     return want
 
 
+_FIXTURE_NAMES = [
+    "Ocean Data Lab", "Ocean Data Labs", "The Ocean Data Lab",
+    "Ocean-Data Lab, Inc.", "Marine Survey 01", "Marine Survey 02",
+    "Marine Survey 01 ", "Institute of Marine Research",
+    "Institute for Marine Research", "Marine Research Institute",
+    "US Geological Survey", "U.S. Geological Survey",
+    "Geological Survey", "ab", "abc", "Polar Data Centre",
+    "Polar Data Center", "National Polar Data Centre",
+]
+#: (entity, name) linker fixture: near-variant clusters, digit-token
+#: decoys, a 70-member identical-name bucket and a two-name entity
+LINKER_FIXTURE = (
+    [(f"<https://x.org/e{i:03d}>", n) for i, n in enumerate(_FIXTURE_NAMES)]
+    + [(f"<https://x.org/h{i:03d}>", "Acme Holdings") for i in range(70)]
+    + [("<https://x.org/e000>", "Zulu Ocean Data Lab")]
+)
+
+
 @pytest.mark.parametrize("rank_dict_max", [None, 0], ids=["rank", "fallback"])
 def test_lsh_candidate_pairs_match_python_reference(spark, monkeypatch,
                                                     rank_dict_max):
@@ -443,27 +490,65 @@ def test_lsh_candidate_pairs_match_python_reference(spark, monkeypatch,
 
     if rank_dict_max is not None:
         monkeypatch.setattr(minhash, "RANK_DICT_MAX", rank_dict_max)
-    names = [
-        "Ocean Data Lab", "Ocean Data Labs", "The Ocean Data Lab",
-        "Ocean-Data Lab, Inc.", "Marine Survey 01", "Marine Survey 02",
-        "Marine Survey 01 ", "Institute of Marine Research",
-        "Institute for Marine Research", "Marine Research Institute",
-        "US Geological Survey", "U.S. Geological Survey",
-        "Geological Survey", "ab", "abc", "Polar Data Centre",
-        "Polar Data Center", "National Polar Data Centre",
-    ]
-    entities = [(f"<https://x.org/e{i:03d}>", n) for i, n in enumerate(names)]
-    entities += [(f"<https://x.org/h{i:03d}>", "Acme Holdings")
-                 for i in range(70)]
-    entities.append(("<https://x.org/e000>", "Zulu Ocean Data Lab"))
-    df = spark.createDataFrame(entities, "entity string, name string")
+    df = spark.createDataFrame(LINKER_FIXTURE, "entity string, name string")
     got = {(r.a, r.b): r.jaccard
            for r in lsh_candidate_pairs(df).collect()}
-    want = _reference_linker_pairs(entities)
+    want = _reference_linker_pairs(LINKER_FIXTURE)
     assert got == want
     assert ("<https://x.org/e000>", "<https://x.org/e001>") in want
     assert ("<https://x.org/e004>", "<https://x.org/e005>") not in want
     assert not any(a.startswith("<https://x.org/h") for a, _ in want)
+
+
+def test_sameas_map_local_matches_distributed(spark, monkeypatch):
+    """The driver-local sameAs map equals the distributed one row for
+    row on the LSH reference fixture: near-variant clusters, digit-token
+    decoys, the 70-member identical-name group and a multi-name entity
+    (e000, also the min of its cluster under its second name)."""
+    from gleaner_spark.operators import link
+
+    triples = _org_triples(spark, LINKER_FIXTURE)
+    got = {}
+    for side, local_link_max in (("local", link.LOCAL_LINK_MAX),
+                                 ("distributed", 0)):
+        monkeypatch.setattr(link, "LOCAL_LINK_MAX", local_link_max)
+        got[side] = sorted(map(tuple, link.sameas_map(triples).collect()))
+    assert got["local"] == got["distributed"]
+    canon = dict(got["local"])
+    assert canon["<https://x.org/e001>"] == "<https://x.org/e000>"
+    assert canon["<https://x.org/h069>"] == "<https://x.org/h000>"
+    assert "<https://x.org/e005>" not in canon  # Marine Survey 02
+
+
+@LINK_GATE
+def test_sameas_map_logs_bucket_cap(spark, monkeypatch, caplog,
+                                    local_link_max):
+    """70 distinct names with one shingle set ({hah, aha, ...}) share
+    every band bucket: the cap drops all 8 buckets and says so on both
+    sides of the driver-local gate, while two near-variants still link.
+    With only the 70 no bucket survives: both sides return an empty map
+    and still warn (the distributed side has no counts then)."""
+    import logging
+
+    from gleaner_spark.operators.link import sameas_map
+
+    _set_link_gate(monkeypatch, local_link_max)
+    hot = [(f"<https://x.org/q{i:03d}>", "Ha" + "ha" * i + " Holdings")
+           for i in range(1, 71)]
+    ocean = [("<https://x.org/o1>", "Ocean Data Lab"),
+             ("<https://x.org/o2>", "Ocean Data Labs")]
+    with caplog.at_level(logging.WARNING,
+                         logger="gleaner_spark.operators.link"):
+        got = sameas_map(_org_triples(spark, hot + ocean)).collect()
+    assert [tuple(r) for r in got] == [(ocean[1][0], ocean[0][0])]
+    assert any("LSH bucket cap dropped 8 of" in r.getMessage()
+               for r in caplog.records)
+
+    caplog.clear()
+    with caplog.at_level(logging.WARNING,
+                         logger="gleaner_spark.operators.link"):
+        assert sameas_map(_org_triples(spark, hot)).collect() == []
+    assert any("LSH bucket" in r.getMessage() for r in caplog.records)
 
 
 def test_sitegraph_ingestion_big_doc_bounded(spark):
@@ -602,7 +687,9 @@ def test_iceberg_branch_selection(spark, tmp_path, monkeypatch):
     assert pl.iceberg_catalog(spark) is None
 
 
-def test_entity_linking_labeled_precision_recall(spark):
+@LINK_GATE
+def test_entity_linking_labeled_precision_recall(spark, monkeypatch,
+                                                 local_link_max):
     """VERDICT r3 #9: end-to-end sameas_map P/R on a LABELED corpus —
     gold clusters of name variants (case / punctuation / 'Inc' suffix)
     plus digit-token near-collision decoys ('Survey Station 01' vs
@@ -612,6 +699,7 @@ def test_entity_linking_labeled_precision_recall(spark):
 
     from gleaner_spark.operators.link import sameas_map
 
+    _set_link_gate(monkeypatch, local_link_max)
     bases = [
         "Ocean Data Consortium", "Polar Ice Monitoring Group",
         "Global Geo Survey Alliance", "River Basin Observatory",
@@ -631,17 +719,7 @@ def test_entity_linking_labeled_precision_recall(spark):
                 f"Survey Station {k:02d}",
             ))
 
-    t = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-    nm = "<https://schema.org/name>"
-    org = "<https://schema.org/Organization>"
-    rows = []
-    for _, e, name in mentions:
-        rows.append((e, t, org, "g"))
-        rows.append((e, nm, f'"{name}"', "g"))
-    triples = spark.createDataFrame(
-        rows, "subject string, predicate string, object string, graph string"
-    )
-
+    triples = _org_triples(spark, [(e, name) for _, e, name in mentions])
     canon = {r.entity: r.canonical for r in sameas_map(triples).collect()}
     predicted: dict[str, list[str]] = {}
     gold: dict[str, list[str]] = {}
