@@ -63,29 +63,19 @@ def mill(jsonld: str | dict, doc_sha: str, graph_urn: str) -> list[QuadRow]:
     ``isValid`` semantics, jsonutils.go:35-51).
     """
     doc = json.loads(jsonld) if isinstance(jsonld, (str, bytes)) else jsonld
-    quads = skolemize(to_rdf(doc), doc_sha)
-    rows = []
-    for q in quads:
-        rows.append(
-            QuadRow(
-                subject=term_to_nq(q.s),
-                predicate=term_to_nq(q.p),
-                object=term_to_nq(q.o),
-                graph=graph_urn,
-            )
-        )
-    return rows
+    return term_to_nq_rows(skolemize(to_rdf(doc), doc_sha), graph_urn)
 
 
-def term_to_nq_rows(quads: list[Quad]) -> list[QuadRow]:
-    """Serialize skolemized quads to QuadRows (graph filled by caller —
-    it's a plain column expression on the Spark side)."""
+def term_to_nq_rows(quads: list[Quad], graph_urn: str = "") -> list[QuadRow]:
+    """Serialize skolemized quads to QuadRows — the package's one quad →
+    n-quads term serializer.  The Spark side leaves ``graph_urn`` empty:
+    there the graph is a plain column expression."""
     return [
         QuadRow(
             subject=term_to_nq(q.s),
             predicate=term_to_nq(q.p),
             object=term_to_nq(q.o),
-            graph="",
+            graph=graph_urn,
         )
         for q in quads
     ]
@@ -93,8 +83,5 @@ def term_to_nq_rows(quads: list[Quad]) -> list[QuadRow]:
 
 def mill_nquads(jsonld: str | dict, doc_sha: str) -> str:
     """n-quads text for one doc (the ``milled/{source}/{sha}.rdf`` body)."""
-    doc = json.loads(jsonld) if isinstance(jsonld, (str, bytes)) else jsonld
-    quads = skolemize(to_rdf(doc), doc_sha)
-    return "".join(
-        f"{term_to_nq(q.s)} {term_to_nq(q.p)} {term_to_nq(q.o)} .\n" for q in quads
-    )
+    return "".join(f"{r.subject} {r.predicate} {r.object} .\n"
+                   for r in mill(jsonld, doc_sha, ""))

@@ -1,11 +1,13 @@
 """Vectorized pandas-UDF wrappers around the pure per-document core.
 
-The only Python-side compute in the whole pipeline lives in these three
-UDFs (extraction, normalize+identify, mill) — everything else is JVM-side
-column expressions.  Each wraps the identical code object the unit tests
-exercise (``gleaner_spark.core``), so per-document semantics are testable
-without Spark (the reference's ``glcon tools rdf`` probe pattern,
-pkg/cli/rdf.go).
+The pipeline's Python-side compute lives in two UDFs: ``extract_page_udf``
+(one pass per page) and ``process_doc_udf`` (one pass per JSON-LD block:
+normalize + identify + mill) — everything else is JVM-side column
+expressions.  Two query-only UDFs sit beside them
+(``structured_triples_udf``, ``winnow_fp_udf``).  Each wraps the
+identical code object the unit tests exercise (``gleaner_spark.core``),
+so per-document semantics are testable without Spark (the reference's
+``glcon tools rdf`` probe pattern, pkg/cli/rdf.go).
 
 Arrow batching notes: html pages are large, so batch size is bounded via
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` (session.py); the UDFs
@@ -20,25 +22,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import extract as core_extract
-from ..core import ids as core_ids
-from ..core import mill as core_mill
-from ..core.contextfix import fix_all
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def extract_jsonld_udf(html: pd.Series, url: pd.Series) -> pd.Series:
-    """html binary + url → array of raw JSON-LD strings (P1, S1).
-
-    Byte-identity contract: each array element is the verbatim script-tag
-    inner text (or the verbatim body for .json/.jsonld URLs)."""
-
-    def one(h, u):
-        if h is None:
-            return []
-        s = bytes(h).decode("utf-8", errors="replace")
-        return core_extract.extract_jsonld_strings(s, u or "")
-
-    return pd.Series([one(h, u) for h, u in zip(html, url)])
 
 
 _BLOCK_SCHEMA = T.ArrayType(
@@ -47,37 +30,6 @@ _BLOCK_SCHEMA = T.ArrayType(
         T.StructField("via", T.StringType()),
     ])
 )
-
-
-@F.pandas_udf(_BLOCK_SCHEMA)
-def extract_with_recovery_udf(html: pd.Series, url: pd.Series) -> pd.Series:
-    """html binary + url → array of (jsonld, via) blocks: the static
-    script-tag extraction (via='static', byte-identity contract) plus —
-    ONLY when a page yields zero static blocks and its bytes hint at
-    embedded JSON-LD — the conservative JS-inline recovery
-    (via='js_inline', core/extract.py:find_inline_jsonld).
-
-    One Arrow pass: the gate runs Python-side on the already-decoded
-    string, so non-candidate pages pay a substring check, not a second
-    UDF evaluation (a column-level F.when(gate, udf) gate does NOT
-    short-circuit — Spark extracts Python UDFs out of conditionals and
-    runs them on every row)."""
-
-    def one(h, u):
-        if h is None:
-            return []
-        s = bytes(h).decode("utf-8", errors="replace")
-        blocks = [(b, "static")
-                  for b in core_extract.extract_jsonld_strings(s, u or "")]
-        if not blocks and (
-            "application/ld+json" in s or '"@context"' in s
-            or '"@type"' in s or '"@graph"' in s
-        ):
-            blocks = [(b, "js_inline")
-                      for b in core_extract.find_inline_jsonld(s)]
-        return blocks
-
-    return pd.Series([one(h, u) for h, u in zip(html, url)])
 
 
 _QUAD_FIELDS = T.StructType(
@@ -134,35 +86,6 @@ def process_doc_udf(
     )
 
 
-QUAD_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("subject", T.StringType()),
-            T.StructField("predicate", T.StringType()),
-            T.StructField("object", T.StringType()),
-        ]
-    )
-)
-
-
-@F.pandas_udf(QUAD_SCHEMA)
-def mill_udf(jsonld: pd.Series, doc_sha: pd.Series) -> pd.Series:
-    """JSON-LD → serialized (s, p, o) triples with deterministic
-    per-document blank-node skolemization (R1-R3).  The graph URN is a
-    plain column expression added by the caller."""
-
-    def one(doc, sha):
-        try:
-            return [
-                (r.subject, r.predicate, r.object)
-                for r in core_mill.mill(doc, sha or "", "")
-            ]
-        except Exception:
-            return []
-
-    return pd.Series([one(d, s) for d, s in zip(jsonld, doc_sha)])
-
-
 @F.pandas_udf(T.StringType())
 def winnow_fp_udf(texts: pd.Series) -> pd.Series:
     """Winnowing document fingerprint (core/text.py) — the one text op
@@ -216,9 +139,13 @@ EXTRACT_PAGE_SCHEMA = T.StructType([
 
 @F.pandas_udf(EXTRACT_PAGE_SCHEMA)
 def extract_page_udf(html: pd.Series, url: pd.Series) -> pd.DataFrame:
-    """Fused per-page extraction: JSON-LD blocks (static + js-inline
-    recovery, identical contract to ``extract_with_recovery_udf``) PLUS
-    the microdata/RDFa Lite structured triples
+    """Fused per-page extraction: JSON-LD blocks — the static script-tag
+    extraction (``via = 'static'``, byte-identity contract: each block is
+    the verbatim script-tag inner text, or the verbatim body for
+    .json/.jsonld URLs) plus, ONLY when a page yields zero static blocks
+    and its bytes hint at embedded JSON-LD, the conservative JS-inline
+    recovery (``via = 'js_inline'``, core/extract.find_inline_jsonld) —
+    PLUS the microdata/RDFa Lite structured triples
     (core/structured.page_structured, blank nodes skolemized per content
     sha) in ONE Arrow pass.  At web scale the raw html is the dominant
     IO + transfer cost of the whole job — fusing means it is scanned,

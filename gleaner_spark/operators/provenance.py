@@ -5,8 +5,9 @@ The reference renders Go text/templates per source / per document
 (``internal/organizations/org.go:18-33,44-94``;
 ``internal/summoner/acquire/prov.go:70-173``) and stores each as a
 separate object.  Here both are column expressions over DataFrames —
-``struct``/``to_json`` builds the JSON-LD, the same mill UDF turns the
-org docs into triples, and lineage is a table instead of object spray.
+``struct``/``to_json`` builds the JSON-LD, the same process UDF that
+mills every harvested doc turns the org docs into triples, and lineage
+is a table instead of object spray.
 
 Quirk note: the reference generates prov *before* upload success
 (jsonutils.go:375-378) so prov can exist for failed stores; our lineage
@@ -18,7 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.udfs import mill_udf
+from ..functions.udfs import process_doc_udf
+from .stages import quad_rows
 
 RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
 
@@ -61,36 +63,17 @@ def org_jsonld(sources_dim: DataFrame) -> DataFrame:
 
 
 def org_triples(sources_dim: DataFrame, bucket: str = "gleaner") -> DataFrame:
-    """R4: org JSON-LD → triples via the same mill path; graph
-    ``urn:{bucket}:{source}:org``."""
-    docs = org_jsonld(sources_dim)
-    # the org doc uses a string @context → run it through the fix+mill
-    # contract like any other doc
-    from ..functions.udfs import process_doc_udf
-
-    processed = docs.withColumn(
-        "proc",
-        process_doc_udf(
-            F.col("jsonld"), F.lit("https"), F.lit("jsonsha"), F.lit("")
-        ),
-    ).select(
-        "source",
-        F.col("proc.jsonld_fixed").alias("jsonld_fixed"),
-        F.col("proc.doc_sha1").alias("doc_sha1"),
+    """R4: org JSON-LD → triples via the same fix + mill contract as any
+    harvested doc (the org doc uses a string @context), skolemized with
+    its ``doc_sha1``; graph ``urn:{bucket}:{source}:org``."""
+    proc = process_doc_udf(
+        F.col("jsonld"), F.lit("https"), F.lit("jsonsha"), F.lit("")
     )
-    milled = processed.withColumn(
-        "quads", mill_udf(F.col("jsonld_fixed"), F.col("doc_sha1"))
-    )
-    return milled.select(
-        "source", F.explode("quads").alias("q")
-    ).select(
-        F.col("q.subject").alias("subject"),
-        F.col("q.predicate").alias("predicate"),
-        F.col("q.object").alias("object"),
+    return quad_rows(org_jsonld(sources_dim).select(
+        "source", proc.quads.alias("quads"),
         F.concat_ws(":", F.lit("urn"), F.lit(bucket), F.col("source"),
                     F.lit("org")).alias("graph"),
-        "source",
-    )
+    ))
 
 
 PROV_CONTEXT = (

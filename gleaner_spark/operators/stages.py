@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.udfs import extract_jsonld_udf, mill_udf, process_doc_udf
+from ..functions.udfs import extract_page_udf, process_doc_udf
 
 DEFAULT_BUCKET = "gleaner"
 
@@ -73,97 +73,44 @@ def salted_repartition(pages: DataFrame, partitions: int, salt: int = 8) -> Data
     )
 
 
-def extract_stage(pages_with_source: DataFrame,
-                  recover_js_inline: bool = True,
-                  extract_structured: bool = True) -> DataFrame:
-    """S1: html → exploded candidate JSON-LD strings (+ per-page
-    structured-markup payload).
+def extract_stage(pages_with_source: DataFrame) -> DataFrame:
+    """S1: html → exploded candidate JSON-LD blocks plus the per-page
+    structured-markup payload, from ONE Arrow pass over the raw html
+    (``extract_page_udf``).  At web scale the html is the dominant IO
+    cost, so every per-page parse shares that single scan and utf-8
+    decode; all gates run Python-side on the decoded string (an
+    ``F.when(gate, udf)`` column gate would NOT short-circuit — Spark
+    evaluates Python UDFs unconditionally).
 
-    Keeps zero-block pages as block_idx = -1 / jsonld NULL rows so the
-    visit is recorded (the reference's ``NILL:`` KV bookkeeping,
-    acquire.go:187-191) — metrics and the checkpoint manifest need them;
-    downstream stages filter them out.
+    Columns added per page:
 
-    ``recover_js_inline`` (default on): pages with ZERO static blocks
-    whose bytes still hint at JSON-LD get a conservative recovery pass
-    over plain <script> code — the static subset of what the reference
-    only reaches via headless rendering (headlessNG.go:302-349).
-    Recovered blocks carry ``via = 'js_inline'`` (static ones ``via =
-    'static'``) so stats can report recovered vs remaining headless
-    candidates separately.
-
-    ``extract_structured`` (default on): microdata + RDFa Lite triples
-    (core/structured.page_structured) ride along as per-page ``sd_sha``
-    / ``sd`` columns, carried on each page's single anchor row
-    (block_idx ≤ 0) and NULL elsewhere, so the exploded relation stores
-    exactly one copy.  ``structured_stage`` derives the mill-shaped
-    triples from the persisted blocks table — at web scale the raw html
-    is the dominant IO cost and this keeps it to ONE scan / ONE Arrow
-    crossing for both extraction surfaces (all gates run Python-side on
-    the already-decoded string: an F.when(gate, udf) column gate would
-    NOT short-circuit — Spark evaluates Python UDFs unconditionally).
+    * ``block_idx`` / ``jsonld`` / ``via`` — one row per JSON-LD block.
+      Zero-block pages keep a block_idx = -1 / jsonld NULL row so the
+      visit is recorded (the reference's ``NILL:`` KV bookkeeping,
+      acquire.go:187-191); downstream stages filter them out.  Pages
+      with ZERO static blocks whose bytes still hint at JSON-LD get a
+      conservative recovery pass over plain <script> code — the static
+      subset of what the reference only reaches via headless rendering
+      (headlessNG.go:302-349); recovered blocks carry ``via =
+      'js_inline'``, static ones ``via = 'static'``.
+    * ``has_ldjson_marker`` — the raw bytes mention ld+json somewhere
+      (S5 headless-coverage gap: a -1 row with the marker is JSON-LD the
+      reference injects headlessly, headlessNG.go:151-429).
+    * ``sd_sha`` / ``sd`` — microdata + RDFa Lite triples
+      (core/structured.page_structured), carried on each page's single
+      anchor row (block_idx ≤ 0) and NULL elsewhere, so the exploded
+      relation stores exactly one copy; ``structured_stage`` derives the
+      mill-shaped triples from it.
     """
-    from ..functions.udfs import (
-        EXTRACT_PAGE_SCHEMA,
-        extract_page_udf,
-        extract_with_recovery_udf,
+    extracted = pages_with_source.withColumn(
+        "page", extract_page_udf(F.col("html"), F.col("url"))
     )
-
-    sd_t = EXTRACT_PAGE_SCHEMA["sd"].dataType
-    if recover_js_inline and extract_structured:
-        extracted = (
-            pages_with_source
-            .withColumn("page", extract_page_udf(F.col("html"), F.col("url")))
-            .withColumn("blocks", F.col("page.blocks"))
-            .withColumn("sd_sha", F.col("page.sd_sha"))
-            .withColumn("sd", F.col("page.sd"))
-            # headless-coverage signal (S5 gap metric): the raw bytes
-            # mention ld+json somewhere — if extraction then yields zero
-            # blocks, the JSON-LD is likely injected by scripts the
-            # reference renders headlessly (headlessNG.go:151-429).
-            # Computed inside the fused UDF pass (the string is already
-            # decoded there; a JVM contains() would re-decode every
-            # page's bytes just to substring-scan them).  Stats counts
-            # the (block_idx = -1 AND marker) pages so the gap is
-            # MEASURED instead of silently missing.
-            .withColumn("has_ldjson_marker", F.col("page.has_ldjson_marker"))
-            .drop("page")
-        )
-    elif recover_js_inline:
-        extracted = (
-            pages_with_source
-            .withColumn("blocks",
-                        extract_with_recovery_udf(F.col("html"), F.col("url")))
-            .withColumn("sd_sha", F.lit(None).cast("string"))
-            .withColumn("sd", F.lit(None).cast(sd_t))
-        )
-    else:
-        extracted = (
-            pages_with_source
-            .withColumn(
-                "blocks",
-                F.transform(
-                    extract_jsonld_udf(F.col("html"), F.col("url")),
-                    lambda x: F.struct(x.alias("jsonld"),
-                                       F.lit("static").alias("via")),
-                ),
-            )
-            .withColumn("sd_sha", F.lit(None).cast("string"))
-            .withColumn("sd", F.lit(None).cast(sd_t))
-        )
-    if "has_ldjson_marker" not in extracted.columns:
-        # non-fused branches: JVM contains() on the decoded bytes
-        extracted = extracted.withColumn(
-            "has_ldjson_marker",
-            F.col("html").cast("string").contains("application/ld+json"),
-        )
-    cols = ["url", "warc_ts", "source", "host", "lang",
-            "identifiertype", "identifierpath", "fixcontextoption",
-            "has_ldjson_marker", "sd_sha", "sd"]
-    exploded = (
+    return (
         extracted.select(
-            *cols,
-            F.posexplode_outer("blocks").alias("block_idx", "block"),
+            "url", "warc_ts", "source", "host", "lang",
+            "identifiertype", "identifierpath", "fixcontextoption",
+            "page.has_ldjson_marker", "page.sd_sha", "page.sd",
+            F.posexplode_outer("page.blocks").alias("block_idx", "block"),
         )
         .withColumn("block_idx", F.coalesce("block_idx", F.lit(-1)))
         .withColumn("jsonld", F.col("block.jsonld"))
@@ -176,7 +123,6 @@ def extract_stage(pages_with_source: DataFrame,
                     F.when(F.col("block_idx") <= 0, F.col("sd_sha")))
         .withColumn("sd", F.when(F.col("block_idx") <= 0, F.col("sd")))
     )
-    return exploded
 
 
 def structured_stage(blocks: DataFrame,
@@ -234,10 +180,9 @@ def normalize_stage(blocks: DataFrame) -> DataFrame:
             F.col("identifierpath"),
         ),
     )
-    via = [F.col("via")] if "via" in blocks.columns else []
     return processed.select(
         "url", "warc_ts", "source", "host", "lang", "block_idx", "jsonld",
-        *via,
+        "via",
         F.col("proc.jsonld_fixed").alias("jsonld_fixed"),
         F.col("proc.valid").alias("valid"),
         F.col("proc.error").alias("error"),
@@ -309,30 +254,34 @@ def mill_stage(docs: DataFrame, bucket: str = DEFAULT_BUCKET) -> DataFrame:
     north-rule SHA-256 of the normalized doc; ``doc_sha1`` stays on the
     docs table for reference parity.
 
-    If the docs frame already carries a ``quads`` column (the fused
-    process UDF, core/process.py), the explode is a pure JVM op — no
-    second Python pass, no re-expansion.  Otherwise the standalone mill
-    UDF runs (single-doc probes, org graphs, external docs tables)."""
-    if "quads" in docs.columns:
-        milled = docs
-    else:
-        milled = docs.withColumn(
-            "quads", mill_udf(F.col("jsonld_fixed"), F.col("doc_sha1"))
-        )
+    The quads were milled by ``normalize_stage``'s process UDF
+    (core/process.py), so this is a pure JVM explode — no second Python
+    pass, no re-expansion."""
+    return quad_rows(
+        docs.select("source", "quads", F.concat_ws(
+            ":", F.lit("urn"), F.lit(bucket), F.col("source"),
+            F.col("norm_sha256"),
+        ).alias("graph"))
+    )
+
+
+def quad_rows(milled: DataFrame) -> DataFrame:
+    """``(source, quads, graph)`` per doc → ``(subject, predicate,
+    object, graph, source)`` rows.
+
+    ``explode_outer`` plus a null filter instead of ``explode``: for an
+    inner explode the optimizer infers ``size(quads) > 0`` and pushes it
+    below the projection that computes ``quads`` — when that projection
+    is ``process_doc_udf`` (an un-materialized docs frame, the org
+    graphs) the Python UDF would run twice."""
     return (
-        milled.select(
-            "source", "doc_sha1", "norm_sha256",
-            F.explode("quads").alias("q"),
-        )
+        milled.select("source", "graph", F.explode_outer("quads").alias("q"))
+        .filter(F.col("q").isNotNull())
         .select(
             F.col("q.subject").alias("subject"),
             F.col("q.predicate").alias("predicate"),
             F.col("q.object").alias("object"),
-            F.concat_ws(
-                ":", F.lit("urn"), F.lit(bucket), F.col("source"),
-                F.col("norm_sha256"),
-            ).alias("graph"),
-            "source",
+            "graph", "source",
         )
     )
 

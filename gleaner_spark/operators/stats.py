@@ -13,11 +13,6 @@ def run_stats(blocks: DataFrame, docs: DataFrame) -> DataFrame:
     """Per-source counters.  ``blocks`` is the extract-stage output
     (block_idx = -1 marks a no-JSON-LD page visit), ``docs`` the
     normalize-stage output (valid flag + dedup info)."""
-    marker = (
-        F.col("has_ldjson_marker")
-        if "has_ldjson_marker" in blocks.columns else F.lit(False)
-    )
-    via = F.col("via") if "via" in blocks.columns else F.lit("static")
     page_counts = blocks.groupBy("source").agg(
         F.countDistinct("url").alias("count"),
         F.count(F.when(F.col("block_idx") >= 0, 1)).alias("summoned"),
@@ -30,12 +25,13 @@ def run_stats(blocks: DataFrame, docs: DataFrame) -> DataFrame:
         # Recovered pages (js_inline blocks) have block_idx >= 0, so they
         # naturally leave this remaining-gap count.
         F.countDistinct(
-            F.when((F.col("block_idx") == -1) & marker, F.col("url"))
+            F.when((F.col("block_idx") == -1) & F.col("has_ldjson_marker"),
+                   F.col("url"))
         ).alias("headless_candidates"),
         # ...and the recovered side of the split: pages whose JSON-LD
         # came from the JS-inline fallback extractor
         F.countDistinct(
-            F.when(via == "js_inline", F.col("url"))
+            F.when(F.col("via") == "js_inline", F.col("url"))
         ).alias("headless_recovered"),
     )
     doc_counts = docs.groupBy("source").agg(

@@ -130,12 +130,6 @@ class PipelineConfig:
     link_entities: bool = True
     salt_partitions: int | None = None
     write_stats: bool = True
-    #: microdata/RDFa Lite extraction (operators/stages.structured_stage)
-    #: — beyond reference parity but part of the north-star extraction
-    #: surface; fused into extract's single html Arrow pass, so it adds
-    #: zero extra scans (near-free on markup-less corpora: the parse is
-    #: gated Python-side on cheap marker checks)
-    extract_structured: bool = True
 
 
 @dataclass
@@ -319,10 +313,8 @@ def _run_pipeline(
     # parallelism at ~8 tasks.  Only the query-facing triples table is
     # source-partitioned (partition pruning is worth it there).
     with _timed("extract"):
-        blocks = _persist(
-            extract_stage(pages, extract_structured=cfg.extract_structured),
-            base, "blocks", None, write_mode, cat,
-        )
+        blocks = _persist(extract_stage(pages), base, "blocks", None,
+                          write_mode, cat)
 
     def _extract_bookkeeping():
         with _timed("extract.manifest+lineage"):
@@ -380,12 +372,11 @@ def _run_pipeline(
     # Microdata/RDFa Lite triples union in before persist/link, so they
     # ride the same raw-triples table, entity linking and materialize
     # dedup as the JSON-LD mill output.  The parse was fused into
-    # extract's single html Arrow pass; this branch reads only the tiny
+    # extract's single html Arrow pass; this stage reads only the tiny
     # sd columns back off the persisted blocks table (column pruning —
     # the raw html is never re-scanned).  In diff mode ``blocks`` is the
     # resume delta, so append semantics carry over unchanged.
-    if cfg.extract_structured:
-        triples = triples.unionByName(structured_stage(blocks, cfg.bucket))
+    triples = triples.unionByName(structured_stage(blocks, cfg.bucket))
 
     # Persist raw (pre-linking) triples — the reference's ``milled/``
     # prefix as a table — and CACHE the read-back: the linker scans the

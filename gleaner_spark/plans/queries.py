@@ -2881,6 +2881,7 @@ def q_kg_remote_context(spark, sf_dir):
         F.lit("strict").alias("fixcontextoption"),
         F.lit(0).alias("block_idx"),
         jsonld.alias("jsonld"),
+        F.lit("static").alias("via"),
     )
     docs = normalize_stage(blocks).filter(F.col("valid"))
     triples = mill_stage(docs, bucket="gleaner")
@@ -2945,6 +2946,7 @@ def q_kg_context_registry(spark, sf_dir):
         F.lit("strict").alias("fixcontextoption"),
         F.lit(0).alias("block_idx"),
         jsonld.alias("jsonld"),
+        F.lit("static").alias("via"),
     )
     docs = normalize_stage(blocks).filter(F.col("valid"))
     triples = mill_stage(docs, bucket="gleaner")

@@ -102,6 +102,7 @@ def drive_blocks(
             F.lit(fixcontextoption).alias("fixcontextoption"),
             F.lit(0).alias("block_idx"),
             F.col("body").alias("jsonld"),
+            F.lit("gdrive").alias("via"),
             "file_id",
         )
     )

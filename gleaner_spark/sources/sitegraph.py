@@ -27,7 +27,8 @@ def sitegraph_blocks(
     identifiertype: str = "jsonsha",
     fixcontextoption: str = "https",
 ) -> DataFrame:
-    """(source, url, body) → extract-stage-shaped block rows.
+    """(source, url, body) → extract-stage-shaped block rows, tagged
+    ``via = 'sitegraph'``.
 
     Feed the result straight into ``operators.stages.normalize_stage``;
     union with crawled blocks upstream of dedup when a run mixes
@@ -44,4 +45,5 @@ def sitegraph_blocks(
         F.lit(fixcontextoption).alias("fixcontextoption"),
         F.lit(0).alias("block_idx"),
         F.col("body").alias("jsonld"),
+        F.lit("sitegraph").alias("via"),
     )

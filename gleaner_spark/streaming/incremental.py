@@ -22,8 +22,10 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.manifest import MISSING_TABLE_CONDITIONS
 from ..operators.stages import (
     dedup_docs,
     extract_stage,
@@ -60,15 +62,13 @@ def _process_batch(batch_df: DataFrame, batch_id: int, out_dir: str,
     docs_path = os.path.join(out_dir, "docs")
     try:
         prior = spark.read.parquet(docs_path)
-    except Exception as e:
+    except AnalysisException as e:
         # only a genuinely-missing table may be swallowed (first batch);
         # any other read failure silently disabling the dedup would
         # re-ingest history as duplicates
-        msg = str(e)
-        if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
+        if e.getCondition() not in MISSING_TABLE_CONDITIONS:
             raise
-        prior = None
-    if prior is not None:
+    else:
         if "batch_id" in prior.columns:
             prior = prior.filter(F.col("batch_id") != batch_id)
         # (a docs table from the pre-batch-partitioned layout holds only

@@ -75,7 +75,7 @@ def test_dedup_docs_collapses_norm_sha_collisions(spark):
         F.lit("jsonsha").alias("identifiertype"),
         F.lit("").alias("identifierpath"),
         F.lit("strict").alias("fixcontextoption"),
-        F.lit(0).alias("block_idx"), "jsonld",
+        F.lit(0).alias("block_idx"), "jsonld", F.lit("static").alias("via"),
     )
     docs = normalize_stage(blocks)
     rows = docs.filter(F.col("valid")).collect()

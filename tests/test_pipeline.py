@@ -144,6 +144,32 @@ def test_triple_pr_vs_pure_python_oracle(corpus):
     assert precision == 1.0 and recall == 1.0
 
 
+def test_org_triples_match_core_mill(spark):
+    """The ``:org`` graphs the oracle test above skips: per source, the
+    org doc goes through the per-document contract (fix + identify +
+    mill) exactly like a harvested doc, skolemized with its doc_sha1."""
+    from gleaner_spark.core.process import process_document
+    from gleaner_spark.operators.provenance import org_jsonld, org_triples
+
+    src = gen_sources_spark(spark)
+    org_docs = {r.source: r.jsonld for r in org_jsonld(src).collect()}
+    got: dict[str, list] = {}
+    for r in org_triples(src).collect():
+        got.setdefault(r.source, []).append(
+            (r.subject, r.predicate, r.object, r.graph))
+    active = [r["name"] for r in sources_rows() if r["active"]]
+    assert active
+    for source in active:
+        p = process_document(org_docs[source])
+        assert p.valid, p.error
+        expected = [
+            tuple(q) for q in core_mill.mill(
+                p.jsonld_fixed, p.doc_sha1, f"urn:gleaner:{source}:org")
+        ]
+        assert expected
+        assert sorted(got[source]) == sorted(expected), source
+
+
 def test_dedup_by_content_sha(corpus):
     result, _, _ = corpus
     docs = result.docs

@@ -88,6 +88,30 @@ def test_mill_explode_is_jvm_only(spark):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+def test_one_python_evaluation_per_stage(spark):
+    """Each Python-UDF boundary costs an Arrow round trip plus
+    interpreter time: extraction is one pass per page
+    (``extract_page_udf``), the org graphs one pass per org doc
+    (``process_doc_udf``, whose quads are the milled triples), and
+    milling an un-materialized docs frame adds no second process pass
+    (the explode's inferred ``size(quads) > 0`` filter must not be
+    pushed below the UDF)."""
+    from gleaner_spark.operators.provenance import org_triples
+    from gleaner_spark.operators.stages import (
+        extract_stage, mill_stage, normalize_stage, with_source,
+    )
+    from gleaner_spark.sources.pages import gen_pages_spark, gen_sources_spark
+
+    blocks = extract_stage(
+        with_source(gen_pages_spark(spark, 20, 2), gen_sources_spark(spark))
+    )
+    assert _plan(blocks).count("ArrowEvalPython") == 1
+    assert _plan(org_triples(gen_sources_spark(spark))).count(
+        "ArrowEvalPython") == 1
+    assert _plan(mill_stage(normalize_stage(blocks))).count(
+        "ArrowEvalPython") == 2
+
+
 def _iter_nodes(node):
     """Walk a SparkPlan tree via py4j, descending through AQE wrappers."""
     yield node

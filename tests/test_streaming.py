@@ -135,6 +135,29 @@ def test_crash_between_sinks_recovers(spark, feed_dirs):
     assert d.select("doc_sha1").distinct().count() == d.count()
 
 
+def test_batch_prior_docs_missing_lands_corrupt_raises(spark, tmp_path):
+    """The cross-batch dedup reads the docs sink: absent (first batch) →
+    the batch lands; present but unreadable → the batch fails instead of
+    silently re-ingesting history as duplicates."""
+    from gleaner_spark.sources.pages import PAGES_SCHEMA, gen_pages_pandas
+    from gleaner_spark.streaming.incremental import _process_batch
+
+    src = gen_sources_spark(spark)
+    batch = spark.createDataFrame(gen_pages_pandas(12, start=0),
+                                  schema=PAGES_SCHEMA)
+
+    fresh = str(tmp_path / "fresh")
+    _process_batch(batch, 0, fresh, src, "gleaner")
+    assert spark.read.parquet(os.path.join(fresh, "docs")).count() > 0
+    assert spark.read.parquet(os.path.join(fresh, "triples")).count() > 0
+
+    (tmp_path / "corrupt" / "docs").mkdir(parents=True)
+    (tmp_path / "corrupt" / "docs" / "part-0.parquet").write_bytes(
+        b"not parquet")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        _process_batch(batch, 0, str(tmp_path / "corrupt"), src, "gleaner")
+
+
 def test_stateful_sessionize_carries_state_across_batches(spark, tmp_path):
     """applyInPandasWithState: a session OPEN at the end of batch 1 must
     continue in batch 2 (state store), and the flush punctuation closes
