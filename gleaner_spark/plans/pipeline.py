@@ -67,17 +67,29 @@ class _AsyncWrites:
     fails silently and the pipeline returns only once everything is
     durable.  If a pipeline stage raises first, already-queued writes
     simply drain in the background thread (they only touch this run's
-    output dir) while the stage error propagates."""
+    output dir) while the stage error propagates.
 
-    def __init__(self) -> None:
+    PySpark pins one JVM thread to each Python thread, so a job started
+    from the worker thread would carry none of the caller's local
+    properties: no job group (``cancelJobGroup`` could not reach it), no
+    description, no scheduler pool.  With ``spark`` given, ``submit``
+    wraps each write in ``inheritable_thread_target``, which copies the
+    caller's properties and tags as they are at submit time."""
+
+    def __init__(self, spark: SparkSession | None = None) -> None:
         from concurrent.futures import ThreadPoolExecutor
 
+        self._spark = spark
         self._pool = ThreadPoolExecutor(
             max_workers=1, thread_name_prefix="gleaner-bookkeeping"
         )
         self._futures: list = []
 
     def submit(self, fn) -> None:
+        if self._spark is not None:
+            from pyspark import inheritable_thread_target
+
+            fn = inheritable_thread_target(self._spark)(fn)
         self._futures.append(self._pool.submit(fn))
 
     def join(self) -> None:
@@ -249,7 +261,7 @@ def run_pipeline(
     sources_dim: DataFrame | None,
     cfg: PipelineConfig,
 ) -> PipelineResult:
-    aw = _AsyncWrites()
+    aw = _AsyncWrites(spark)
     try:
         return _run_pipeline(spark, pages, sources_dim, cfg, aw)
     except BaseException:
@@ -333,6 +345,22 @@ def _run_pipeline(
     with _timed("normalize"):
         docs_all = _persist(normalize_stage(blocks), base, "processed",
                             None, write_mode, cat)
+
+    # Each bookkeeping write is queued as soon as its inputs are durable
+    # (stats: blocks + processed; prov: docs), so it overlaps the stages
+    # after it instead of running after the last one (measured on a
+    # 200-page harvest: 9 jobs, 2-4 s, ran after materialize when stats
+    # and prov were queued there).
+    stats = None
+    if cfg.write_stats:
+        stats = run_stats(blocks, docs_all)
+
+        def _stats_bookkeeping(stats=stats):
+            with _timed("stats"):
+                _write(stats, base, "stats", cat=cat)
+
+        aw.submit(_stats_bookkeeping)
+
     docs = dedup_docs(docs_all)
     if cfg.mode == "diff":
         # cross-run content dedup: drop docs whose sha an earlier run
@@ -356,6 +384,12 @@ def _run_pipeline(
             partition_lineage(docs, cfg.run_id, "normalize").write.mode(
                 "append"
             ).parquet(os.path.join(base, "lineage"))
+        # R5 prov lineage rows
+        with _timed("prov"):
+            prov_lineage(docs.filter(F.col("valid")), sources_dim,
+                         cfg.run_id, cfg.bucket).write.mode(
+                write_mode
+            ).parquet(os.path.join(base, "prov"))
 
     aw.submit(_docs_bookkeeping)
 
@@ -406,24 +440,8 @@ def _run_pipeline(
             partition_lineage(triples, cfg.run_id, "materialize").write.mode(
                 "append"
             ).parquet(os.path.join(base, "lineage"))
-        # R5 prov lineage rows
-        with _timed("prov"):
-            prov_lineage(docs.filter(F.col("valid")), sources_dim,
-                         cfg.run_id, cfg.bucket).write.mode(
-                write_mode
-            ).parquet(os.path.join(base, "prov"))
 
     aw.submit(_materialize_bookkeeping)
-
-    stats = None
-    if cfg.write_stats:
-        stats = run_stats(blocks, docs_all)
-
-        def _stats_bookkeeping(stats=stats):
-            with _timed("stats"):
-                _write(stats, base, "stats", cat=cat)
-
-        aw.submit(_stats_bookkeeping)
 
     # everything bookkeeping is durable (or raised) before we return
     with _timed("bookkeeping.join"):

@@ -398,8 +398,17 @@ def sources_rows() -> list[dict]:
 
 
 def gen_sources_spark(spark):
+    """The sources dimension as a local relation.  Built from a pandas
+    frame, it goes through the Arrow path and plans as a
+    ``LocalTableScan``; a Python list would become a parallelized Python
+    RDD (``Scan ExistingRDD``), so every consumer — the ``with_source``
+    broadcast, ``org_triples``, ``prov_lineage`` — would re-run Python
+    tasks (and, in a fresh process, start the Python workers) for 20
+    rows."""
+    import pandas as pd
+
     return spark.createDataFrame(
-        [tuple(r.values()) for r in sources_rows()],
+        pd.DataFrame(sources_rows()),
         "name string, propername string, url string, domain string, pid string,"
         " active boolean, identifiertype string, identifierpath string,"
         " fixcontextoption string",

@@ -793,6 +793,75 @@ def test_async_writes_join_raises_and_abort_swallows(caplog):
     assert any("lineage boom" in r.message for r in caplog.records)
 
 
+def test_bookkeeping_jobs_keep_caller_job_group(spark, tmp_path,
+                                               monkeypatch):
+    """Bookkeeping writes run on the _AsyncWrites thread, whose pinned
+    JVM thread starts with no local properties: every job they start
+    must still carry the caller's job group, so ``cancelJobGroup``
+    reaches them and no job of the run lands in group None."""
+    from gleaner_spark.plans import pipeline
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    seen = []
+    real_prov = pipeline.prov_lineage
+
+    def prov_spy(*args, **kwargs):  # runs on the bookkeeping thread
+        seen.append(sc.getLocalProperty("spark.jobGroup.id"))
+        return real_prov(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "prov_lineage", prov_spy)
+    before_none = set(tracker.getJobIdsForGroup(None))
+    before_g = set(tracker.getJobIdsForGroup("g"))
+    sc.setJobGroup("g", "job-group inheritance test")
+    try:
+        run_pipeline(spark, gen_pages_spark(spark, 12, 2),
+                     gen_sources_spark(spark),
+                     PipelineConfig(output_dir=str(tmp_path / "out"),
+                                    run_id="jg", link_entities=False))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert seen == ["g"]
+    assert set(tracker.getJobIdsForGroup(None)) - before_none == set()
+    assert set(tracker.getJobIdsForGroup("g")) - before_g
+
+
+def test_stage_failure_after_bookkeeping_queued(spark, tmp_path,
+                                                monkeypatch):
+    """A stage that fails after stats and prov are queued: run_pipeline
+    re-raises that exact error, and the bookkeeping thread is gone."""
+    import threading
+
+    from gleaner_spark.plans import pipeline
+
+    queued = []
+    real_submit = pipeline._AsyncWrites.submit
+
+    def submit_spy(self, fn):
+        queued.append(fn.__name__)
+        real_submit(self, fn)
+
+    boom = RuntimeError("link boom")
+
+    def failing_link(triples):
+        assert queued == ["_extract_bookkeeping", "_stats_bookkeeping",
+                          "_docs_bookkeeping"]
+        raise boom
+
+    monkeypatch.setattr(pipeline._AsyncWrites, "submit", submit_spy)
+    monkeypatch.setattr(pipeline, "link_stage", failing_link)
+    with pytest.raises(RuntimeError) as info:
+        run_pipeline(spark, gen_pages_spark(spark, 12, 2),
+                     gen_sources_spark(spark),
+                     PipelineConfig(output_dir=str(tmp_path / "out"),
+                                    run_id="fail"))
+    assert info.value is boom
+    assert not [t for t in threading.enumerate()
+                if t.name.startswith("gleaner-bookkeeping")]
+
+
 def test_iceberg_writer_keeps_partition_spec_on_replace():
     """ADVICE r4 (medium): the createOrReplace branch must carry the
     partition spec exactly like the create branch — otherwise the second

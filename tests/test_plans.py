@@ -70,6 +70,26 @@ def test_pipeline_source_join_broadcasts(spark):
     assert "BroadcastHashJoin" in _plan(pages)
 
 
+def test_sources_dimension_is_local_relation(spark):
+    """The sources dimension plans as a LocalTableScan: no Python RDD
+    (``Scan ExistingRDD``) that every consumer would re-run in Python
+    workers, and no silent fall-back off the Arrow path.  Its rows are
+    ``sources_rows()`` exactly: values, booleans, empty strings, column
+    order."""
+    from gleaner_spark.sources.pages import gen_sources_spark, sources_rows
+
+    dim = gen_sources_spark(spark)
+    plan = _plan(dim)
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+    want = sources_rows()
+    assert dim.columns == list(want[0])
+    got = [r.asDict() for r in dim.collect()]
+    assert got == want
+    assert [r["active"] for r in got].count(False) == 2
+    assert sum(r["identifierpath"] == "" for r in got) == len(got) - 1
+
+
 def test_mill_explode_is_jvm_only(spark):
     """With the fused process UDF the mill is a pure JVM explode — no
     second Python stage in the plan."""
