@@ -404,7 +404,12 @@ def gen_sources_spark(spark):
     RDD (``Scan ExistingRDD``), so every consumer — the ``with_source``
     broadcast, ``org_triples``, ``prov_lineage`` — would re-run Python
     tasks (and, in a fresh process, start the Python workers) for 20
-    rows."""
+    rows.  The Arrow path loads the JVM's Arrow classes here rather than
+    in the first pandas-UDF stage: about 1 s of a cold process moves
+    into set-up.  An inline ``VALUES`` table also plans as a
+    ``LocalTableScan`` and keeps that second in the first stage; set-up
+    plus first stage came out the same (3 fresh processes each, 4
+    cpus), so the plainer frame stays."""
     import pandas as pd
 
     return spark.createDataFrame(

@@ -768,7 +768,7 @@ def test_entity_linking_labeled_precision_recall(spark, monkeypatch,
     assert recall >= 0.95, f"recall {recall}: missed {want - got}"
 
 
-def test_async_writes_join_raises_and_abort_swallows(caplog):
+def test_async_writes_join_raises_and_abort_swallows(spark, caplog):
     """_AsyncWrites contract: join() re-raises the first queued-write
     failure (nothing fails silently); abort() — the pipeline failure
     path — drains without raising and logs the write error instead of
@@ -777,7 +777,7 @@ def test_async_writes_join_raises_and_abort_swallows(caplog):
 
     from gleaner_spark.plans.pipeline import _AsyncWrites
 
-    aw = _AsyncWrites()
+    aw = _AsyncWrites(spark)
     order = []
     aw.submit(lambda: order.append("a"))
     aw.submit(lambda: (_ for _ in ()).throw(RuntimeError("manifest boom")))
@@ -785,7 +785,7 @@ def test_async_writes_join_raises_and_abort_swallows(caplog):
         aw.join()
     assert order == ["a"]  # ordered single worker ran the first write
 
-    aw2 = _AsyncWrites()
+    aw2 = _AsyncWrites(spark)
     aw2.submit(lambda: (_ for _ in ()).throw(RuntimeError("lineage boom")))
     with caplog.at_level(logging.WARNING,
                          logger="gleaner_spark.plans.pipeline"):
