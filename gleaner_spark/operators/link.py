@@ -490,8 +490,10 @@ def sameas_map(triples: DataFrame, threshold: float = JACCARD_THRESHOLD) -> Data
     previously flooded LSH buckets past MAX_BUCKET, silently dropping
     recall); (2) MinHash-LSH + connected components over the DISTINCT
     names only — the expensive quadratic-ish machinery runs on the
-    distinct-name universe, which grows sub-linearly with the corpus.
-    Canonical ids propagate representative → component → every member.
+    distinct-name universe, which grows sub-linearly with the corpus;
+    two groups that share an entity (one entity, two names) are joined
+    by an edge whatever their names' similarity.  Canonical ids
+    propagate representative → component → every member.
 
     Up to :data:`LOCAL_LINK_MAX` mentions the whole map is built in one
     driver pass (:func:`_sameas_map`)."""
@@ -507,7 +509,12 @@ def _sameas_map(triples: DataFrame, threshold: float):
     pairs (:func:`_local_link_pairs`) and union-find run in-process and
     the map returns as one local DataFrame.  Above it: the distributed
     groupBy / :func:`lsh_candidate_pairs` / :func:`connected_components`
-    plan.  Both produce the same rows."""
+    plan.  Both produce the same rows, one per linked entity.
+
+    An entity that carries several names sits in several exact-name
+    groups; their representatives get an edge before the components
+    are taken, whatever the names' Jaccard, so the entity's names end
+    in one component and the entity has one canonical."""
     from ..functions.minhash import bucket_cap_counts
     from ..plans.pipeline import _timed
 
@@ -541,10 +548,18 @@ def _sameas_map(triples: DataFrame, threshold: float):
                     rep_name[e] = n
             edges = _local_link_pairs(rep_name, threshold, BAND_SIZE,
                                       MAX_BUCKET)
+            # groups that share an entity: its first group's
+            # representative → each other group's
+            first_rep: dict = {}
+            for e, n in zip(ents, norms):
+                r = first_rep.setdefault(e, rep[n])
+                if r != rep[n]:
+                    edges.append((r, rep[n]))
             comp = union_find_min([a for a, _ in edges], [b for _, b in edges])
             canon = {n: comp.get(e, e) for n, e in rep.items()}
-            rows = [(e, canon[n]) for e, n in zip(ents, norms)
-                    if e != canon[n]]
+            linked = {e: canon[n] for e, n in zip(ents, norms)
+                      if e != canon[n]}
+            rows = list(linked.items())
         import pandas as pd
         from pyspark.sql.types import StructField, StructType
 
@@ -583,8 +598,15 @@ def _sameas_map(triples: DataFrame, threshold: float):
             )
         else:
             _warn_bucket_cap(m["dropped_buckets"], m["total_buckets"])
+    # groups that share an entity: each group's representative → the
+    # entity's min representative
+    min_rep = members.groupBy("entity").agg(F.min("rep").alias("a"))
+    shared = members.join(min_rep, "entity").select(
+        "a", F.col("rep").alias("b")
+    ).filter(F.col("a") != F.col("b"))
     with _timed("link.cc"):
-        components = _ckpt(connected_components(edges))
+        components = _ckpt(connected_components(
+            edges.select("a", "b").unionByName(shared)))
 
     # rep → component canonical (reps not in any component keep themselves)
     rep_canon = (
@@ -600,6 +622,7 @@ def _sameas_map(triples: DataFrame, threshold: float):
         members.join(rep_canon, "name_norm")
         .filter(F.col("entity") != F.col("canonical"))
         .select("entity", "canonical")
+        .distinct()
     ), None
 
 

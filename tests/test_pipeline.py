@@ -547,6 +547,35 @@ def test_sameas_map_local_matches_distributed(spark, monkeypatch):
 
 
 @LINK_GATE
+def test_sameas_map_links_groups_sharing_an_entity(spark, monkeypatch,
+                                                   local_link_max):
+    """One entity carrying two names whose 3-gram Jaccard is below the
+    threshold (0.667 < 0.7): the two exact-name groups have different
+    representatives and LSH adds no edge, but the shared entity joins
+    them — on both sides of the driver-local gate every mention of
+    either name gets one canonical, and the map has one row per
+    entity.  A third, unrelated name stays out."""
+    from gleaner_spark.operators.link import sameas_map
+
+    _set_link_gate(monkeypatch, local_link_max)
+    both = "<https://site01.example.org/org/g2>"
+    a, b = "Polar Science Centre", "The Polar Science Center"
+    assert _reference_linker_pairs([("x", a), ("y", b)]) == {}
+    triples = _org_triples(spark, [
+        ("<https://site00.example.org/org/p0>", b),
+        (both, a), (both, b),
+        ("<https://site02.example.org/org/p2>", a),
+        ("<https://site03.example.org/org/p3>", "River Basin Observatory"),
+    ])
+    got = sorted(map(tuple, sameas_map(triples).collect()))
+    assert got == [
+        (both, "<https://site00.example.org/org/p0>"),
+        ("<https://site02.example.org/org/p2>",
+         "<https://site00.example.org/org/p0>"),
+    ]
+
+
+@LINK_GATE
 def test_sameas_map_logs_bucket_cap(spark, monkeypatch, caplog,
                                     local_link_max):
     """70 distinct names with one shingle set ({hah, aha, ...}) share
