@@ -405,11 +405,12 @@ def gen_sources_spark(spark):
     broadcast, ``org_triples``, ``prov_lineage`` — would re-run Python
     tasks (and, in a fresh process, start the Python workers) for 20
     rows.  The Arrow path loads the JVM's Arrow classes here rather than
-    in the first pandas-UDF stage: about 1 s of a cold process moves
-    into set-up.  An inline ``VALUES`` table also plans as a
-    ``LocalTableScan`` and keeps that second in the first stage; set-up
-    plus first stage came out the same (3 fresh processes each, 4
-    cpus), so the plainer frame stays."""
+    in the first pandas-UDF stage, so in a cold process building the
+    dimension takes 3.2 s against 2.5 s for the list (median of 5 fresh
+    processes, 4 cpus) while its first consumer drops 7.3 → 4.8 s.  An
+    inline ``VALUES`` table with 180 bound literals also plans as a
+    ``LocalTableScan`` (2.8 s to build, first consumer 4.8 s); within
+    that noise it was not worth a hand-built SQL text."""
     import pandas as pd
 
     return spark.createDataFrame(
