@@ -171,13 +171,6 @@ def simhash64_hex(text: str) -> str:
     )
 
 
-def hamming_hex(a: str, b: str) -> int:
-    """Hamming distance between two equal-length hex signatures."""
-    return sum(
-        bin(int(x, 16) ^ int(y, 16)).count("1") for x, y in zip(a, b)
-    )
-
-
 def language_score(text: str, lang: str) -> int:
     """Stopword-hit count for one language profile (used by ``lang_id``)."""
     padded = " " + normalize_text(text) + " "

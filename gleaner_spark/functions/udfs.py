@@ -86,6 +86,16 @@ def process_doc_udf(
     )
 
 
+# The function is pure; it is marked nondeterministic only so that the
+# optimizer keeps it in place.  A filter above a deterministic projection
+# is pushed below it with the UDF call substituted into the predicate, so
+# ``normalize_stage(...).filter(F.col("valid"))`` over an un-materialized
+# frame evaluated the UDF twice, in the filter and in the projection.
+# The marker's one other effect: the struct's alias stays a projection of
+# its own, in the same codegen stage as the field reads.
+process_doc_udf = process_doc_udf.asNondeterministic()
+
+
 @F.pandas_udf(T.StringType())
 def winnow_fp_udf(texts: pd.Series) -> pd.Series:
     """Winnowing document fingerprint (core/text.py) — the one text op

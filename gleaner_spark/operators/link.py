@@ -221,13 +221,7 @@ def union_find_min(us: list, vs: list) -> dict:
     return {node: comp_min[find(node)] for node in nodes}
 
 
-def connected_components(
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
-    max_iterations: int = MAX_CC_ITERATIONS,
-    ckpt_every: int = 1,
-    local_max_edges: int = LOCAL_CC_MAX_EDGES,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Alternating large-star / small-star connected components (Kiveris
     et al., *Connected Components in MapReduce and Beyond*, SoCC'14):
     each round rewires every node toward the minimum of its (closed)
@@ -237,44 +231,30 @@ def connected_components(
     >20-diameter components in round 1 (VERDICT 'What's wrong' #4).
 
     Each round is two self-join-free aggregations + joins over the edge
-    frame.  Rounds run in blocks of ``ckpt_every`` with ONE
-    lineage-truncating barrier per block (reliable ``checkpoint`` when
-    the session has a checkpoint dir — required on a real cluster,
-    where ``localCheckpoint`` blocks die with their executor).
-    Convergence is checked at block boundaries only; the star operators
-    are idempotent at the fixpoint, so a mid-block fixpoint costs at
-    most k-1 no-op rounds and is detected at the next boundary.
+    frame, followed by ONE lineage-truncating barrier (reliable
+    ``checkpoint`` when the session has a checkpoint dir — required on a
+    real cluster, where ``localCheckpoint`` blocks die with their
+    executor) and the convergence check.
 
-    ``ckpt_every`` DEFAULTS TO 1 on measurement, not oversight: the
-    round-4 hypothesis that per-round barriers dominated wall time was
-    tested and refuted — at sf0.1 (5-round convergence) k=1 ran 3.7 s,
-    k=2 ran 5.4 s (the boundary-only convergence check pays ~k-1 no-op
-    rounds, each a full-shuffle round), and k=3 ran 44 s (three rounds
-    of un-truncated lineage stack ~15 shuffles into one plan and the
-    scheduler/optimizer cost explodes).  Barriers here are cheap
-    relative to rounds; keep k=1 unless a profile of a specific
-    deployment says otherwise.
-
-    Graphs whose canonical edge count measures ≤ ``local_max_edges``
-    are solved exactly by driver-local union-find instead (round 6):
-    at that size the distributed rounds are pure job latency.  Pass
-    ``local_max_edges=0`` to force the distributed rounds.
+    Graphs whose canonical edge count measures ≤ ``LOCAL_CC_MAX_EDGES``
+    are solved exactly by driver-local union-find instead (round 6): at
+    that size the distributed rounds are pure job latency.
 
     Raises ``RuntimeError`` if the edge fixpoint is not reached within
-    ``max_iterations`` blocks — wrong components must never be
+    ``MAX_CC_ITERATIONS`` rounds — wrong components must never be
     returned silently.
 
-    Returns (entity, component), component = min entity id —
+    Returns (entity, component) for every endpoint of ``edges``,
+    self-loop-only vertices included, component = min entity id —
     deterministic regardless of partitioning and parallelism.
     """
-    if vertices is None:
-        # derive BEFORE dropping self-loops: a vertex appearing only in
-        # self-loop edges must still come back labeled with itself
-        vertices = (
-            edges.select(F.col("a").alias("entity"))
-            .union(edges.select(F.col("b").alias("entity")))
-            .distinct()
-        )
+    # derive BEFORE dropping self-loops: a vertex appearing only in
+    # self-loop edges must still come back labeled with itself
+    vertices = (
+        edges.select(F.col("a").alias("entity"))
+        .union(edges.select(F.col("b").alias("entity")))
+        .distinct()
+    )
     # canonical undirected edge set, self-loops dropped
     e = (
         edges.select(
@@ -290,14 +270,12 @@ def connected_components(
     e = _ckpt(e, eager=False)
     n_e = e.count()
 
-    if n_e <= local_max_edges:
+    if n_e <= LOCAL_CC_MAX_EDGES:
         # Small graph (measured, not assumed): exact union-find on the
         # driver.  Each distributed round is a multi-exchange job whose
         # latency dwarfs the compute at this size (5 rounds ≈ 4 s for a
         # 50k-edge graph that union-find solves in ~50 ms); labels are
         # identical — component = min entity id — and deterministic.
-        # ``local_max_edges=0`` forces the distributed path (used by the
-        # algorithm tests so the star rounds stay covered).
         # Arrow-batched transfer both ways: .collect() deserializes py4j
         # rows one at a time (measured 5× slower than toPandas on the
         # 45k-edge sf1.0 graph), and a pandas frame re-enters through
@@ -330,9 +308,7 @@ def connected_components(
                 F.coalesce("component", F.col("entity")).alias("component"),
             )
         )
-        out._cc_observation = {"rounds": 0, "checkpoints": 0,
-                               "ckpt_every": ckpt_every,
-                               "local_solve_edges": n_e}
+        out._cc_observation = {"rounds": 0, "local_solve_edges": n_e}
         return out
 
     def one_round(cur: DataFrame) -> DataFrame:
@@ -371,18 +347,17 @@ def connected_components(
             .distinct()
         )
 
-    ckpt_every = max(int(ckpt_every), 1)
+    # One barrier per round, on measurement: at sf0.1 (5-round
+    # convergence) a barrier every round ran 3.7 s, every 2 rounds 5.4 s
+    # (the boundary-only convergence check pays no-op rounds, each a
+    # full-shuffle round) and every 3 rounds 44 s (three rounds of
+    # un-truncated lineage stack ~15 shuffles into one plan and the
+    # scheduler/optimizer cost explodes).
     converged = n_e == 0
-    rounds = n_ckpts = 0
-    for _ in range(max_iterations):
-        if converged:
-            break
-        new_e = e
-        for _k in range(ckpt_every):
-            new_e = one_round(new_e)
-            rounds += 1
-        new_e = _ckpt(new_e, eager=False)
-        n_ckpts += 1
+    rounds = 0
+    while not converged and rounds < MAX_CC_ITERATIONS:
+        new_e = _ckpt(one_round(e), eager=False)
+        rounds += 1
         n_new = new_e.count()
         if n_new == n_e:
             diff = new_e.join(e, ["u", "v"], "left_anti").limit(1).count()
@@ -391,8 +366,8 @@ def connected_components(
     if not converged:
         raise RuntimeError(
             f"connected_components: no fixpoint after {rounds} "
-            f"large-star/small-star rounds ({n_ckpts} checkpoint blocks "
-            f"of {ckpt_every}) — refusing to return possibly-wrong labels"
+            "large-star/small-star rounds — refusing to return "
+            "possibly-wrong labels"
         )
 
     # at the fixpoint every component is a star u→min; min nodes and
@@ -405,10 +380,9 @@ def connected_components(
             F.coalesce("component", F.col("entity")).alias("component"),
         )
     )
-    # observability: rounds actually run + barriers taken (the
-    # _lsh_observation pattern — consumed by run_stats/pipeline logging)
-    out._cc_observation = {"rounds": rounds, "checkpoints": n_ckpts,
-                           "ckpt_every": ckpt_every}
+    # observability: rounds actually run, one barrier each (the
+    # _lsh_observation pattern)
+    out._cc_observation = {"rounds": rounds}
     return out
 
 

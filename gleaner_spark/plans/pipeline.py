@@ -140,7 +140,6 @@ class PipelineConfig:
     mode: str = "full"            # 'full' | 'diff' (resume)
     link_entities: bool = True
     salt_partitions: int | None = None
-    write_stats: bool = True
 
 
 @dataclass
@@ -148,7 +147,7 @@ class PipelineResult:
     blocks: DataFrame
     docs: DataFrame
     triples: DataFrame
-    stats: DataFrame | None = None
+    stats: DataFrame
     resumed_urls_skipped: int | None = None
 
 
@@ -358,15 +357,13 @@ def _run_pipeline(
     # after it instead of running after the last one (measured on a
     # 200-page harvest: 9 jobs, 2-4 s, ran after materialize when stats
     # and prov were queued there).
-    stats = None
-    if cfg.write_stats:
-        stats = run_stats(blocks, docs_all)
+    stats = run_stats(blocks, docs_all)
 
-        def _stats_bookkeeping(stats=stats):
-            with _timed("stats"):
-                _write(stats, base, "stats", cat=cat)
+    def _stats_bookkeeping():
+        with _timed("stats"):
+            _write(stats, base, "stats", cat=cat)
 
-        aw.submit(_stats_bookkeeping)
+    aw.submit(_stats_bookkeeping)
 
     docs = dedup_docs(docs_all)
     if cfg.mode == "diff":

@@ -839,6 +839,16 @@ where l.doc_id < r.doc_id
 """
 
 
+#: Vocabulary ceiling for q_dedup_ngram_jaccard's dense int shingle ids
+#: (one-task sort + broadcast attach); above it the ids come from a
+#: range-partitioned sort, the only side that scales past one partition.
+#: Both sides match the oracle (range forced: sf0.01, 600 rows; sf0.1,
+#: 6,024 rows).  Dense is the faster one where it fits: 4 alternating
+#: ``bench_extra.py --windows 5`` pairs at sf0.1 on a 4-cpu host gave
+#: medians of 3.97 s dense vs 4.37 s range, dense winning 3 of 4.
+NGRAM_DENSE_DICT_MAX = 4_000_000
+
+
 def q_dedup_ngram_jaccard(spark, sf_dir):
     """Exact word-3-gram Jaccard pairs ≥ t=0.5, computed with df-ordered
     prefix filtering (Chaudhuri/Bayardo all-pairs): a pair with
@@ -879,7 +889,7 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
         raw.groupBy("s").agg(F.count("*").alias("df"))
     )
     n_dict = dict_df.count()
-    if n_dict <= 4_000_000:
+    if n_dict <= NGRAM_DENSE_DICT_MAX:
         # small vocabulary (the count is free post-ckpt): dense int ids
         # from a one-task sort of the tiny dictionary, broadcast attach.
         # Int arrays matter: ArrayIntersect over int is measurably
@@ -1048,10 +1058,10 @@ O_SIMHASH = (
 # --- 64-bit SimHash dedup (banded Hamming) --------------------------------
 #
 # Signature: core.text.simhash64_hex — bit j (= 4k + r) driven by bit r
-# of hex nibble k of md5(token); stored as 16 hex chars (no bigint sign
-# trouble at bit 63).  4 bands of 16 bits: any pair with Hamming ≤ 3
-# shares at least one untouched band (pigeonhole), so banded candidates
-# + exact verification = the EXACT distance-≤3 pair set.
+# of hex nibble k of md5(token); stored as two longs of 32 bits each
+# (no bigint sign trouble at bit 63).  4 bands of 16 bits: any pair with
+# Hamming ≤ 3 shares at least one untouched band (pigeonhole), so banded
+# candidates + exact verification = the EXACT distance-≤3 pair set.
 
 SIMHASH_HAMMING_MAX = 3
 SIMHASH_MAX_BUCKET = 256   # band-bucket cap (quadratic-blowup guard)
@@ -1069,30 +1079,16 @@ SIMHASH_DUP_SQL = (
 )
 
 
-def _simhash64_frame(df):
-    """Codegen-path 64-bit SimHash: exploded token rows → 64 ±1 sum
-    aggregates (map-side partial) → nibble-packed hex signature.  Same
-    exploded-rows-not-HOF layout as MinHash (interpreted higher-order
-    functions measured ~25× slower).
-
-    Round 6: bit j is read from two conv()-parsed 32-bit halves of the
-    md5 hex (one shiftright + and per aggregate) instead of the old
-    per-aggregate instr+substring character probe — 64 string scans and
-    substring allocations per token row become 2 convs per row.  Bit
-    semantics are identical: hex char k+1 is the high nibble of hi32
-    for k < 8 (shift 4·(7−k)+r) and of lo32 for k ≥ 8.  Alongside the
-    hex signature, the same sums emit the signature as two packed longs
-    (sig_hi = chars 1-8, sig_lo = chars 9-16) so pair verification can
-    XOR+bit_count instead of re-parsing hex per candidate."""
-    return _simhash64_pack(_simhash64_sums(df))
-
-
 def _simhash64_sums(df):
     """Per-doc ±1 bit sums (doc_id, s0..s63, has_empty) — the linear
     stage of SimHash.  ``has_empty`` = 1 iff the normalized text is
     empty (split('') yields exactly the one token '', and '' can occur
     as a token ONLY in that case) — carried so callers can do exact
-    suffix algebra on the sums (see q_dedup_simhash_pairs)."""
+    suffix algebra on the sums (see q_dedup_simhash_pairs).
+
+    Bit j reads hex nibble k of md5 from one of two conv()-parsed 32-bit
+    halves (hi32 for k < 8, shift 4·(7−k)+r): two convs per token row
+    instead of 64 instr+substring probes."""
     toks = df.select(
         "doc_id", F.explode(F.expr(_tokens_sql("text", False))).alias("t")
     ).select(
@@ -1125,11 +1121,11 @@ def _simhash_nib(k: int) -> str:
     ) + ")"
 
 
-def _simhash64_pack_ints(sums, *extra):
-    """(doc_id, s0..s63) → (doc_id, *extra, sig_hi, sig_lo) — the
-    packed-longs signature alone, for callers that never need the hex
-    form (q_dedup_simhash_pairs): skips 16 nibble-case substring lookups
-    and a 16-way concat per doc."""
+def _simhash64_pack_ints(sums):
+    """(doc_id, s0..s63) → (doc_id, sig_hi, sig_lo): the signature as two
+    packed longs, sig_hi = hex chars 1-8 and sig_lo = chars 9-16 of
+    core.text.simhash64_hex, so ``f"{sig_hi:08x}{sig_lo:08x}"`` is the
+    reference's hex form."""
     def word(first: int) -> str:  # nibbles first..first+7, big-endian
         return "cast(" + " + ".join(
             f"cast({_simhash_nib(first + k)} as bigint) * {1 << (4 * (7 - k))}"
@@ -1137,18 +1133,9 @@ def _simhash64_pack_ints(sums, *extra):
         ) + " as bigint)"
 
     return sums.select(
-        "doc_id", *extra,
+        "doc_id",
         F.expr(word(0)).alias("sig_hi"), F.expr(word(8)).alias("sig_lo"),
     )
-
-
-def _simhash64_pack(sums):
-    """(doc_id, s0..s63) → (doc_id, simhash64 hex, sig_hi, sig_lo)."""
-    hexpr = "concat(" + ", ".join(
-        f"substring('0123456789abcdef', {_simhash_nib(k)} + 1, 1)"
-        for k in range(16)
-    ) + ")"
-    return _simhash64_pack_ints(sums, F.expr(hexpr).alias("simhash64"))
 
 
 def q_dedup_simhash_pairs(spark, sf_dir):
@@ -2992,14 +2979,12 @@ select s, '<https://codemeta.github.io/terms/developmentStatus>',
 
 
 # ---------------------------------------------------------------------------
-# multimodal metadata (binary payload plumbing; decode is a typed stub)
+# multimodal: binary payload metadata and codec-free decode
 # ---------------------------------------------------------------------------
 
 def q_multimodal_meta(spark, sf_dir):
-    """Opaque-binary metadata path: payload size + content hash.  The
-    decode/feature-extract steps are mapInPandas stubs in
-    operators/multimodal.py (image/audio libs absent in this
-    environment); this query oracles the metadata plumbing."""
+    """Opaque-binary metadata path: payload size + content hash (the
+    decode path is q_multimodal_decode_real)."""
     d = _load(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
@@ -3013,33 +2998,6 @@ select doc_id, octet_length(text::BLOB) as n_bytes,
        md5(text) as payload_md5
 from documents
 """
-
-
-def q_multimodal_decode(spark, sf_dir):
-    """Decode + feature-extract over opaque binary payloads via
-    mapInPandas (operators/multimodal.py).  The codec is a deterministic
-    stub (no image libs in this container); the Spark plumbing — schema,
-    repartition-by-payload, Arrow batch shape — is real.  No SQL oracle
-    (iterated-sha256 fake decode is not portable SQL); rows-only check +
-    unit tests."""
-    from ..operators.multimodal import decode_features, gen_media
-
-    n = 300
-    media = gen_media(spark, n, partitions=8)
-    return decode_features(media, repartition_to=8).select(
-        "payload_id", "mime", "width", "height", "n_pixels", "mean_luma"
-    )
-
-
-def q_multimodal_frames(spark, sf_dir):
-    """Video frame-sampling plumbing (flatMap-shaped mapInPandas):
-    one row per sampled frame.  Rows-only check + unit tests."""
-    from ..operators.multimodal import gen_media, sample_frames
-
-    media = gen_media(spark, 300, partitions=8).filter(
-        F.col("mime") == "video/mp4"
-    )
-    return sample_frames(media, every_ms=1000, max_frames=8)
 
 
 def q_multimodal_decode_real(spark, sf_dir):

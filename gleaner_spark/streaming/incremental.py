@@ -93,13 +93,13 @@ def stream_pipeline(
     out_dir: str,
     sources_dim: DataFrame | None = None,
     bucket: str = "gleaner",
-    available_now: bool = True,
-    processing_time: str | None = None,
 ):
     """Start the incremental pipeline over ``pages_dir``; returns the
-    StreamingQuery.  Exactly-once file tracking lives in the stream
-    checkpoint under ``out_dir``; maxFilesPerTrigger bounds micro-batch
-    memory when a backlog of WARC segments lands at once."""
+    StreamingQuery.  The ``availableNow`` trigger processes every file
+    present at start, in micro-batches, and then stops, so each call is
+    one incremental harvest.  Exactly-once file tracking lives in the
+    stream checkpoint under ``out_dir``; maxFilesPerTrigger bounds
+    micro-batch memory when a backlog of WARC segments lands at once."""
     stream = (
         spark.readStream.schema(PAGES_SCHEMA)
         .option("maxFilesPerTrigger", "8")
@@ -108,11 +108,7 @@ def stream_pipeline(
     writer = stream.writeStream.foreachBatch(
         lambda df, bid: _process_batch(df, bid, out_dir, sources_dim, bucket)
     ).option("checkpointLocation", os.path.join(out_dir, "_stream_checkpoint"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def windowed_host_rates(spark: SparkSession, pages_dir: str,

@@ -306,14 +306,13 @@ def test_resume_skips_completed_urls(spark, tmp_path):
     out = str(tmp_path / "resume")
     src = gen_sources_spark(spark)
     first = gen_pages_spark(spark, 40, 4)
-    cfg = PipelineConfig(output_dir=out, run_id="r1", link_entities=False,
-                         write_stats=False)
+    cfg = PipelineConfig(output_dir=out, run_id="r1", link_entities=False)
     run_pipeline(spark, first, src, cfg)
 
     # second run over a superset: only the 20 new urls flow through
     superset = gen_pages_spark(spark, 60, 4)
     cfg2 = PipelineConfig(output_dir=out, run_id="r2", mode="diff",
-                          link_entities=False, write_stats=False)
+                          link_entities=False)
     result = run_pipeline(spark, superset, src, cfg2)
     assert result.resumed_urls_skipped == 40
     assert result.blocks.select("url").distinct().count() == 20
@@ -343,11 +342,11 @@ def test_diff_prior_docs_missing_is_full_mode_corrupt_raises(spark, tmp_path):
     def run(out):
         return run_pipeline(spark, pages, src, PipelineConfig(
             output_dir=str(out), run_id="d1", mode="diff",
-            link_entities=False, write_stats=False))
+            link_entities=False))
 
     full = run_pipeline(spark, pages, src, PipelineConfig(
         output_dir=str(tmp_path / "full"), run_id="f1",
-        link_entities=False, write_stats=False))
+        link_entities=False))
     assert run(tmp_path / "fresh").docs.count() == full.docs.count() > 0
 
     (tmp_path / "corrupt" / "docs").mkdir(parents=True)
@@ -370,27 +369,36 @@ def test_connected_components_shapes(spark):
     assert comp["m"] == comp["n"] == "m"
 
 
-def test_connected_components_long_chain(spark):
+def _force_distributed_cc(monkeypatch):
+    from gleaner_spark.operators import link
+
+    monkeypatch.setattr(link, "LOCAL_CC_MAX_EDGES", 0)
+
+
+def test_connected_components_long_chain(spark, monkeypatch):
     """An 80-node chain (diameter 79) — O(diameter) min-label
     propagation capped at 20 iterations returned WRONG labels for this
     graph (round-1 VERDICT #4); large-star/small-star needs O(log² n)
     rounds, and non-convergence must raise rather than mislabel."""
+    _force_distributed_cc(monkeypatch)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(79)], "a long, b long"
     )
     comp = {r.entity: r.component
-            for r in connected_components(edges, local_max_edges=0).collect()}
+            for r in connected_components(edges).collect()}
     assert len(comp) == 80
     assert set(comp.values()) == {0}
 
 
-def test_connected_components_raises_on_iteration_cap(spark):
+def test_connected_components_raises_on_iteration_cap(spark, monkeypatch):
+    from gleaner_spark.operators import link
+
+    _force_distributed_cc(monkeypatch)
+    monkeypatch.setattr(link, "MAX_CC_ITERATIONS", 1)
     edges = spark.createDataFrame([(i, i + 1) for i in range(40)],
                                   "a long, b long")
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(edges, max_iterations=1, local_max_edges=0)
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        connected_components(edges)
 
 
 #: ``LOCAL_LINK_MAX`` on both sides of the linker's driver-local gate
@@ -955,45 +963,26 @@ def test_iceberg_writer_keeps_partition_spec_on_replace():
             "append", "overwritePartitions")
 
 
-def test_cc_ckpt_every_k_identical_labels(spark):
-    """VERDICT r4 #3 (resolved by measurement): block-checkpointed CC
-    (ckpt_every=k) must produce IDENTICAL labels for any k — the star
-    operators are idempotent at the fixpoint, so boundary-only
-    convergence checks are safe.  (The perf claim was refuted: k=1
-    measured fastest at sf0.1 — see connected_components docstring —
-    so 1 stays the default; this locks the correctness half.)"""
-    from pyspark.sql import functions as F
-
-    from gleaner_spark.operators.link import connected_components
-
-    # two chains + a star + isolated vertices
+def test_cc_ckpt_every_k_identical_labels(spark, monkeypatch):
+    """The distributed rounds, one barrier each, label two chains, a
+    star and a self-loop-only vertex with their component minimum."""
+    _force_distributed_cc(monkeypatch)
     rows = [(i, i + 1) for i in range(0, 24)] + \
            [(100 + i, 100 + i + 1) for i in range(0, 7)] + \
-           [(200, 200 + i) for i in range(1, 9)]
-    edges = spark.createDataFrame(rows, "a long, b long")
-    verts = spark.createDataFrame([(i,) for i in range(0, 25)]
-                                  + [(100 + i,) for i in range(0, 8)]
-                                  + [(200 + i,) for i in range(0, 9)]
-                                  + [(999,)], "entity long")
-    base = None
-    for k in (1, 2, 3):
-        out = connected_components(edges, vertices=verts, ckpt_every=k,
-                                   local_max_edges=0)
-        got = sorted((r.entity, r.component) for r in out.collect())
-        obs = out._cc_observation
-        assert obs["ckpt_every"] == k and obs["checkpoints"] >= 1
-        assert obs["rounds"] >= obs["checkpoints"]
-        if base is None:
-            base = got
-            # chain→0, chain→100, star→200, isolate→itself
-            comp = dict(got)
-            assert comp[24] == 0 and comp[107] == 100
-            assert comp[208] == 200 and comp[999] == 999
-        else:
-            assert got == base
+           [(200, 200 + i) for i in range(1, 9)] + [(999, 999)]
+    out = connected_components(
+        spark.createDataFrame(rows, "a long, b long"))
+    comp = {r.entity: r.component for r in out.collect()}
+    assert len(comp) == 25 + 8 + 9 + 1
+    # chain→0, chain→100, star→200, self-loop→itself
+    assert {comp[i] for i in range(25)} == {0}
+    assert {comp[100 + i] for i in range(8)} == {100}
+    assert {comp[200 + i] for i in range(9)} == {200}
+    assert comp[999] == 999
+    assert out._cc_observation["rounds"] >= 1
 
 
-def test_cc_local_fast_path_matches_distributed(spark):
+def test_cc_local_fast_path_matches_distributed(spark, monkeypatch):
     """The size-gated driver-local union-find must return EXACTLY the
     distributed large-star/small-star labels on a random graph (and
     report itself in the observation)."""
@@ -1005,8 +994,9 @@ def test_cc_local_fast_path_matches_distributed(spark):
     rows = [(rng.randint(0, 300), rng.randint(0, 300)) for _ in range(400)]
     edges = spark.createDataFrame(rows, "a long, b long")
     local = connected_components(edges)
-    dist = connected_components(edges, local_max_edges=0)
     got_l = sorted((r.entity, r.component) for r in local.collect())
+    _force_distributed_cc(monkeypatch)
+    dist = connected_components(edges)
     got_d = sorted((r.entity, r.component) for r in dist.collect())
     assert got_l == got_d
     assert local._cc_observation.get("local_solve_edges", 0) > 0

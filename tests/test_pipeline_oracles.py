@@ -2,7 +2,8 @@
 the pipeline path — ``extract_stage``, ``normalize_stage``,
 ``mill_stage``, the org/prov operators or ``run_stats`` — so a
 regression in the one extract/mill path fails the suite, not only
-``scripts/check_oracles.py``.  Compared the same way as that script:
+``scripts/check_oracles.py`` — and for ``dedup_ngram_jaccard`` on both
+sides of its dictionary gate.  Compared the same way as that script:
 name-sorted columns, order-insensitive normalized rows."""
 
 from __future__ import annotations
@@ -44,8 +45,7 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", PIPELINE_QUERIES)
-def test_pipeline_query_matches_oracle(spark, duck, name):
+def _assert_matches_oracle(spark, duck, name):
     from gleaner_spark.plans.queries import QUERIES
 
     fn, oracle = QUERIES[name]
@@ -54,3 +54,20 @@ def test_pipeline_query_matches_oracle(spark, duck, name):
     assert srows
     assert scols == ocols
     assert srows == orows
+
+
+@pytest.mark.parametrize("name", PIPELINE_QUERIES)
+def test_pipeline_query_matches_oracle(spark, duck, name):
+    _assert_matches_oracle(spark, duck, name)
+
+
+@pytest.mark.parametrize("dense_dict_max", [None, 0], ids=["dense", "range"])
+def test_ngram_jaccard_both_id_sides_match_oracle(spark, duck, monkeypatch,
+                                                  dense_dict_max):
+    """Dense int shingle ids below NGRAM_DENSE_DICT_MAX, range-partitioned
+    long ids above it (forced here with a 0 ceiling)."""
+    from gleaner_spark.plans import queries
+
+    if dense_dict_max is not None:
+        monkeypatch.setattr(queries, "NGRAM_DENSE_DICT_MAX", dense_dict_max)
+    _assert_matches_oracle(spark, duck, "dedup_ngram_jaccard")

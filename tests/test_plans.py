@@ -115,7 +115,9 @@ def test_one_python_evaluation_per_stage(spark):
     (``process_doc_udf``, whose quads are the milled triples), and
     milling an un-materialized docs frame adds no second process pass
     (the explode's inferred ``size(quads) > 0`` filter must not be
-    pushed below the UDF)."""
+    pushed below the UDF), and neither does filtering one on ``valid``."""
+    from pyspark.sql import functions as F
+
     from gleaner_spark.operators.provenance import org_triples
     from gleaner_spark.operators.stages import (
         extract_stage, mill_stage, normalize_stage, with_source,
@@ -130,6 +132,11 @@ def test_one_python_evaluation_per_stage(spark):
         "ArrowEvalPython") == 1
     assert _plan(mill_stage(normalize_stage(blocks))).count(
         "ArrowEvalPython") == 2
+    valid = normalize_stage(blocks).filter(F.col("valid"))
+    assert sum(
+        "ArrowEvalPython" in line and "process_doc_udf" in line
+        for line in _plan(valid).splitlines()
+    ) == 1
 
 
 def _iter_nodes(node):
@@ -490,7 +497,9 @@ def test_simhash_pairs_algebra_handles_empty_and_whitespace(spark, tmp_path):
     after the concat."""
     from pyspark.sql import functions as F
 
-    from gleaner_spark.plans.queries import _simhash64_frame
+    from gleaner_spark.plans.queries import (
+        _simhash64_pack_ints, _simhash64_sums,
+    )
 
     rows = _random_texts(30, seed=11) + [
         (900, ""), (901, "   "), (902, "\t\n "), (903, "one"),
@@ -504,10 +513,17 @@ def test_simhash_pairs_algebra_handles_empty_and_whitespace(spark, tmp_path):
                        .alias("text"))
     exact = base.select((F.col("doc_id") + 200000).alias("doc_id"), "text")
     direct = {
-        r.doc_id: (r.simhash64, r.sig_hi, r.sig_lo)
-        for r in _simhash64_frame(
-            base.unionByName(near).unionByName(exact)).collect()
+        r.doc_id: (f"{r.sig_hi:08x}{r.sig_lo:08x}", r.sig_hi, r.sig_lo)
+        for r in _simhash64_pack_ints(_simhash64_sums(
+            base.unionByName(near).unionByName(exact))).collect()
     }
+    from gleaner_spark.core.text import simhash64_hex
+
+    for doc, text in rows:
+        if text.strip():  # an empty text hashes the one token '' in SQL
+            assert direct[doc][0] == simhash64_hex(text), doc
+        assert direct[doc + 100000][0] == simhash64_hex(
+            text + " extra near dup token"), doc
 
     # the production path (algebraic derivation) inside the query: check
     # via its observable output instead of re-deriving here — both the
