@@ -89,10 +89,11 @@ def process_doc_udf(
 # The function is pure; it is marked nondeterministic only so that the
 # optimizer keeps it in place.  A filter above a deterministic projection
 # is pushed below it with the UDF call substituted into the predicate, so
-# ``normalize_stage(...).filter(F.col("valid"))`` over an un-materialized
-# frame evaluated the UDF twice, in the filter and in the projection.
-# The marker's one other effect: the struct's alias stays a projection of
-# its own, in the same codegen stage as the field reads.
+# without the marker ``normalize_stage(...).filter(F.col("valid"))`` over
+# an un-materialized frame evaluates the UDF twice, in the filter and in
+# the projection.  The marker's one other effect: the struct's alias
+# stays a projection of its own, in the same codegen stage as the field
+# reads.
 process_doc_udf = process_doc_udf.asNondeterministic()
 
 

@@ -348,11 +348,11 @@ def connected_components(edges: DataFrame) -> DataFrame:
         )
 
     # One barrier per round, on measurement: at sf0.1 (5-round
-    # convergence) a barrier every round ran 3.7 s, every 2 rounds 5.4 s
-    # (the boundary-only convergence check pays no-op rounds, each a
-    # full-shuffle round) and every 3 rounds 44 s (three rounds of
-    # un-truncated lineage stack ~15 shuffles into one plan and the
-    # scheduler/optimizer cost explodes).
+    # convergence) a barrier every round ran 3.7 s; every 2 rounds, 5.4 s
+    # (convergence is then checked only at barriers, so no-op
+    # full-shuffle rounds run past the fixpoint); every 3 rounds, 44 s
+    # (three rounds of un-truncated lineage stack ~15 shuffles into one
+    # plan and the scheduler/optimizer cost explodes).
     converged = n_e == 0
     rounds = 0
     while not converged and rounds < MAX_CC_ITERATIONS:
@@ -371,7 +371,7 @@ def connected_components(edges: DataFrame) -> DataFrame:
         )
 
     # at the fixpoint every component is a star u→min; min nodes and
-    # isolated vertices label themselves
+    # self-loop-only vertices label themselves
     labels = e.select(F.col("u").alias("entity"), F.col("v").alias("component"))
     out = (
         vertices.join(labels, "entity", "left")
